@@ -14,6 +14,14 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
+def docs_pdf():
+    """The smoke corpus's documents table, read with pandas (no Spark)."""
+    import pandas as pd
+
+    return pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
+
+
+@pytest.fixture(scope="session")
 def spark():
     from ukis_kafka_spark.plans import get_spark
 

@@ -11,7 +11,6 @@ from collections import Counter, defaultdict
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from tests.conftest import SF_SMOKE
 from ukis_kafka_spark import api
@@ -19,11 +18,6 @@ from ukis_kafka_spark import api
 
 def _rows(spark, name):
     return api.queries()[name](spark, SF_SMOKE).collect()
-
-
-@pytest.fixture(scope="module")
-def docs_pdf():
-    return pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
 
 
 def test_exact_dedup_reference(spark, docs_pdf):

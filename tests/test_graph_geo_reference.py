@@ -1134,3 +1134,31 @@ def test_mcc_reference(spark):
         assert abs(mcc - ref) < 1e-4
         mccs.add(r["mcc2_ppb"])
     assert len(mccs) == len(rows)  # per-label skill genuinely varies
+
+
+def test_knn_join_matches_brute_force(spark):
+    ev = list(pd.read_parquet(f"{SF_SMOKE}/events.parquet").itertuples())
+    ids = np.array([r.event_id for r in ev])
+    lon = np.array([r.value * 3.6 - 180 for r in ev])
+    lat = np.array([float((r.user_id * 7) % 180 - 90) for r in ev])
+    rows = {r.event_id: r for r in _rows(spark, "g_knn_join")}
+    assert set(rows) == set(ids.tolist())
+    order = np.argsort(ids)
+    within = (np.abs(lon[:, None] - lon[None, :]) <= 2.0) & (
+        np.abs(lat[:, None] - lat[None, :]) <= 2.0
+    )
+    np.fill_diagonal(within, False)
+    for i in range(len(ids)):
+        r = rows[ids[i]]
+        nb = np.where(within[i])[0]
+        assert r.n_within == len(nb)
+        if len(nb) >= 4:
+            d2 = (lon[i] - lon[nb]) ** 2 + (lat[i] - lat[nb]) ** 2
+            cand = sorted(zip(d2.tolist(), ids[nb].tolist()))
+            assert (r.knn4_d2, r.knn4_id) == cand[3]
+        else:
+            assert r.knn4_id is None and r.knn4_d2 is None
+    # both branches fire at smoke scale
+    assert any(v.knn4_id is not None for v in rows.values())
+    assert any(v.knn4_id is None for v in rows.values())
+    del order

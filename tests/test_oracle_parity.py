@@ -57,20 +57,16 @@ def test_survey_inventory_matches_registry():
 
 
 def test_queue_is_clean_and_queries_complete():
-    """_QUEUE names must exist in the registry with no duplicates, and
-    queries() must still expose every registered query exactly once."""
-    from ukis_kafka_spark.api import _QUEUE, QUERIES
+    """queries() must expose every registered query exactly once."""
+    from ukis_kafka_spark.api import QUERIES
 
-    missing = [n for n in _QUEUE if n not in QUERIES]
-    assert not missing, f"_QUEUE names not in registry: {missing}"
-    assert len(set(_QUEUE)) == len(_QUEUE), "duplicate in _QUEUE"
     ordered = list(api.queries())
     assert set(ordered) == set(QUERIES) and len(ordered) == len(QUERIES)
 
 
 def test_driver_window_self_rotates():
-    """Every non-green ID must lead queries() IN QUEUE ORDER before any
-    green ID — a stale window burned the whole round-4 slot (VERDICT
+    """Every non-green ID must lead queries() IN REGISTRY ORDER before
+    any green ID — a stale window burned the whole round-4 slot (VERDICT
     r04 item 2). NOTE the assert is backlog-size-invariant: once the
     backlog drops below 50 the head-50 *necessarily* back-fills with
     green IDs, so 'zero green in head' is a stale success condition —
@@ -79,18 +75,20 @@ def test_driver_window_self_rotates():
     Green back-fill order is pinned separately: oldest satisfying
     driver round first (VERDICT r10 item 3 — each round refreshes the
     stalest evidence, not the newest)."""
-    from ukis_kafka_spark.api import ORACLE, _driver_evidence
+    from ukis_kafka_spark.api import ORACLE, QUERIES, _REFLOAT_MIN_ROUND, _driver_evidence
 
     green, rounds = _driver_evidence()
     ordered = list(api.queries())
     nongreen = [n for n in ordered if n not in green]
     k = min(50, len(nongreen))
     head = ordered[:50]
-    # 1. no green ID is ordered before any non-green ID
+    # 1. no green ID is ordered before any non-green ID, and the
+    #    non-green lead keeps registry order
     assert head[:k] == nongreen[:k], (
         f"green IDs ordered before non-green ones in the driver window: "
         f"{[n for n in head[:k] if n in green]}"
     )
+    assert nongreen == [n for n in QUERIES if n not in green]
     # 2. the green tail is oldest-evidence-first (non-decreasing rounds)
     tail_rounds = [rounds[n] for n in ordered[len(nongreen):]]
     assert tail_rounds == sorted(tail_rounds), "green tail not oldest-evidence-first"
@@ -98,15 +96,20 @@ def test_driver_window_self_rotates():
     for name in ["m_near_dedup", "m_simhash", "g_point_in_poly", "g_wkb_serde"]:
         if name in ORACLE and name not in green:
             assert name in head, f"{name} upgraded rows-only->oracle but not in window"
+    # 4. a refloated ID whose latest row predates its min round is not
+    #    green, so it leads queries()
+    for name, min_round in _REFLOAT_MIN_ROUND.items():
+        if rounds.get(name, 0) < min_round:
+            assert name not in green and ordered.index(name) < len(nongreen)
 
 
 @pytest.mark.parametrize("backlog", [0, 19, 100])
 def test_rotation_at_simulated_backlogs(tmp_path, backlog):
     """Rotation invariants at backlogs 0, 19 and 100 (VERDICT r10 item
     1's done-bar): build a synthetic CORRECTNESS set in tmp_path that
-    leaves exactly ``backlog`` queue-leading IDs non-green and spreads
-    the green rows across three synthetic rounds, then assert the
-    ordering contract at each size — non-green lead in queue order,
+    leaves exactly ``backlog`` registry-leading IDs non-green and
+    spreads the green rows across three synthetic rounds, then assert
+    the ordering contract at each size — non-green lead in registry order,
     green tail oldest-round-first, head length always 50 (the driver
     window never shrinks; it back-fills)."""
     import json
@@ -114,13 +117,12 @@ def test_rotation_at_simulated_backlogs(tmp_path, backlog):
     from ukis_kafka_spark.api import (
         ORACLE,
         QUERIES,
-        _QUEUE,
         _REFLOAT_MIN_ROUND,
         _driver_evidence,
         _ordered_names,
     )
 
-    queue = list(dict.fromkeys([n for n in _QUEUE if n in QUERIES] + list(QUERIES)))
+    queue = list(QUERIES)
     nongreen_ids = set(queue[:backlog])
     # refloated IDs can only be green with a row >= their min round —
     # use a synthetic round far above every real entry
@@ -173,7 +175,7 @@ def test_rotation_simulated_next_round(tmp_path):
     a hardcoded number: a hardcoded r05 overwrote the driver's real r05
     rows in the tmp copy and failed the whole suite post-snapshot,
     VERDICT r05 item 1) marking the current head-50 hash-green, and
-    assert _driver_green absorbs them — i.e. the following window would
+    assert the CORRECTNESS evidence absorbs them — i.e. the following window would
     automatically drain 50 FRESH IDs with no manual rotation (the
     failure mode that burned round 4)."""
     import json
@@ -181,7 +183,7 @@ def test_rotation_simulated_next_round(tmp_path):
     import shutil
     from pathlib import Path
 
-    from ukis_kafka_spark.api import ORACLE, _driver_green
+    from ukis_kafka_spark.api import ORACLE, _driver_evidence
 
     repo = Path(__file__).resolve().parents[1]
     rounds = []
@@ -201,8 +203,8 @@ def test_rotation_simulated_next_round(tmp_path):
         for n in head
     }
     (tmp_path / f"CORRECTNESS_r{next_round:02d}.json").write_text(json.dumps(fake))
-    green_now = _driver_green()
-    green_next = _driver_green(root=str(tmp_path))
+    green_now = _driver_evidence()[0]
+    green_next = _driver_evidence(root=str(tmp_path))[0]
     assert set(head) <= green_next
     assert green_next >= green_now
     # the simulated next-round head is entirely fresh, and sized
@@ -214,3 +216,31 @@ def test_rotation_simulated_next_round(tmp_path):
     assert not (set(next_head) & set(head))
     assert green_next <= set(queue), "driver rows reference unknown IDs"
     assert len(next_head) == min(50, len(queue) - len(green_next))
+
+
+def test_session_memo_rebuilds_rewritten_table(spark, duck_smoke, tmp_path):
+    """The session memo is keyed on the fingerprint of the table it
+    reads, not on the corpus path: after embeddings.parquet is
+    rewritten in place with a row subset, m_pq_quantize (through the
+    memoized _pq_encode fit) in the SAME session must equal the oracle
+    over the new files, not the first run's pinned result."""
+    import shutil
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from .conftest import _duck_con
+
+    for f in Path(SF_SMOKE).glob("*.parquet"):
+        shutil.copyfile(f, tmp_path / f.name)
+    sf = str(tmp_path)
+    oracle = api.oracle_sql()["m_pq_quantize"]
+    run = api.queries()["m_pq_quantize"]
+    assert_parity(run(spark, sf), duck_smoke, oracle, "m_pq_quantize")
+
+    emb = tmp_path / "embeddings.parquet"
+    full = pq.read_table(emb)
+    pq.write_table(full.slice(0, full.num_rows // 2), emb)
+    second = run(spark, sf)
+    assert second.count() == full.num_rows // 2
+    assert_parity(second, _duck_con(sf), oracle, "m_pq_quantize")

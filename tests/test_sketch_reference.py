@@ -267,3 +267,32 @@ def test_theta_intersect_reference(spark):
         # the real check.
         assert abs(est_u - true_u) <= 0.4 * true_u
         assert abs(est_i - true_i) <= 0.9 * true_i
+
+
+def test_ams_f2_matches_python_md5(spark, docs_pdf):
+    from ukis_kafka_spark.ml.sketch import _AMS_ROWS
+
+    freqs = defaultdict(Counter)
+    for r in docs_pdf.itertuples():
+        for t in r.text.split(" "):
+            freqs[r.lang][t] += 1
+    got = {(r.lang, r.r): r for r in _rows(spark, "m_ams_f2")}
+    assert len(got) == len(freqs) * _AMS_ROWS
+    for lang, c in freqs.items():
+        exact = sum(f * f for f in c.values())
+        for rr in range(_AMS_ROWS):
+            s = 0
+            for tok, f in c.items():
+                h = hashlib.md5(f"{tok}:{rr}".encode()).hexdigest()[0]
+                s += f if h in "13579bdf" else -f
+            row = got[(lang, rr)]
+            assert (row.s_signed, row.f2_exact) == (s, exact)
+            assert row.f2_est == s * s
+            assert row.err_ppm == abs(s * s - exact) // max(exact // 1_000_000, 1)
+    # the estimator is actually informative at smoke scale: the median
+    # estimate lands within 2x of exact for every lang
+    for lang, c in freqs.items():
+        exact = sum(f * f for f in c.values())
+        ests = sorted(got[(lang, rr)].f2_est for rr in range(_AMS_ROWS))
+        med = (ests[_AMS_ROWS // 2 - 1] + ests[_AMS_ROWS // 2]) // 2
+        assert 0 < med < 4 * exact

@@ -14,7 +14,7 @@ the shared integer-lattice formulations.
 from __future__ import annotations
 
 import math
-from collections import Counter
+from collections import Counter, defaultdict
 
 import numpy as np
 import pandas as pd
@@ -638,3 +638,48 @@ def test_cuped_reference(spark):
     # non-vacuity: theta engaged and the two arms' adjustments differ
     assert want[0][4] != want[0][2] or want[1][4] != want[1][2]
     assert want[0][1] != want[1][1]
+
+
+def test_anova_matches_numpy(spark, docs_pdf):
+    docs = list(docs_pdf.itertuples())
+    groups = defaultdict(list)
+    for r in docs:
+        groups[r.doc_id % 5].append(len(r.text.split(" ")))
+    assert len(groups) == 5
+    sizes = {len(v) for v in groups.values()}
+    assert len(sizes) == 1, "design must be balanced"
+    all_v = np.array([v for g in groups.values() for v in g], dtype=np.float64)
+    n, k = len(all_v), 5
+    grand = all_v.mean()
+    ssb = sum(len(v) * (np.mean(v) - grand) ** 2 for v in groups.values())
+    ssw = sum(((np.array(v, dtype=np.float64) - np.mean(v)) ** 2).sum() for v in groups.values())
+    f_ref = (ssb / (k - 1)) / (ssw / (n - k))
+    (row,) = _rows(spark, "q_anova")
+    assert row.k == 5 and row.n == n
+    # exact integer sufficient statistics: n*SSB and n*SSW
+    assert row.ssb_scaled == pytest.approx(n * ssb, rel=1e-9)
+    assert row.ssw_scaled == pytest.approx(n * ssw, rel=1e-9)
+    assert row.f_stat == pytest.approx(f_ref, rel=1e-12)
+    assert row.ssb_scaled > 0 and row.ssw_scaled > 0  # non-vacuous
+
+
+def test_bandit_ucb_matches_numpy(spark, docs_pdf):
+    stats = defaultdict(lambda: [0, 0])
+    for r in docs_pdf.itertuples():
+        st = stats[r.lang]
+        st[0] += 1
+        st[1] += len(r.text.split(" ")) >= 60
+    scores = {
+        lang: w / n + 2.0 / math.sqrt(n) for lang, (n, w) in stats.items()
+    }
+    best = max(scores, key=lambda l: scores[l])
+    got = {r.lang: r for r in _rows(spark, "m_bandit_ucb")}
+    assert set(got) == set(stats)
+    for lang, (n, w) in stats.items():
+        r = got[lang]
+        assert (r.n_docs, r.n_pass) == (n, w)
+        assert r.ucb_score == scores[lang]  # bit-exact: IEEE-only ops
+        assert r.is_next == (1 if lang == best else 0)
+    assert sum(r.is_next for r in got.values()) == 1
+    # partial firing at smoke scale too
+    assert all(0 < w < n for n, w in stats.values())

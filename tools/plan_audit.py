@@ -164,7 +164,8 @@ BROADCAST_HINT_ALLOWLIST: dict[str, str] = {
 # ---- physical-plan fingerprints (VERDICT r10 stretch item 7) ------
 # _REFLOAT_MIN_ROUND is a manual discipline ("when refactoring a
 # shipped operator's plan, add an entry so its stale driver row stops
-# counting"). This sweep makes the harness catch a missed entry: each
+# counting; delete the entry once a satisfying CORRECTNESS row lands").
+# This sweep makes the harness catch a missed entry: each
 # batch query's canonicalized physical-plan hash is committed to
 # PLAN_FINGERPRINTS.json; a query whose CURRENT fingerprint differs
 # from the committed one while it still counts as driver-green means
@@ -461,7 +462,7 @@ def main() -> int:
         with open(fp_path) as fh:
             prev_fps = json.load(fh)
     cur_fps: dict[str, str] = {}
-    green = api._driver_green()
+    green = api._driver_evidence()[0]
 
     rows: dict[str, dict[str, int]] = {}
     flags: list[str] = []

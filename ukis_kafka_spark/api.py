@@ -38,289 +38,21 @@ from .registry import ORACLE, QUERIES
 FLAGSHIP = "q_agg_groupby"
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# Ordering for ``queries()``: the driver's per-round correctness gate
-# records exactly the FIRST 50 registry entries each round. The window
-# is SELF-ROTATING: ``_driver_green()`` reads the committed
-# CORRECTNESS_r*.json files and ``queries()`` floats every ID whose
-# latest driver row does NOT satisfy its current check level to the
-# head, in ``_QUEUE`` order. Rounds 1-4 drained 196 distinct IDs
-# (185 hash-green); the r4 verdict flagged that a manual rotation was
-# missed — this mechanism makes a stale window structurally impossible
-# (tests/test_registry_contract.py pins it).
-_QUEUE = [
-    # round-11 leads: this round's 5 additions — float them for driver
-    # confirmation; the 20-ID backlog (19 tail + the q_agg_percentile
-    # refloat) fits the window with ~25 slots left for the
-    # oldest-evidence refresh (VERDICT r10 items 2-3)
-    "m_facility_select", "m_grad_accum_plan", "m_ngram_gini",
-    "src_delta_log", "m_bandit_ucb", "m_ams_f2", "s_grad_accum_stream",
-    # round-10 leads: this round's 7 additions — float them for driver
-    # confirmation; the remaining 43 window slots drain the 58-ID
-    # backlog to a ~15-ID tail for r11 (VERDICT r09 item 2's arithmetic)
-    "m_ngram_speculate", "m_keyword_odds", "m_pack_mask_stats", "q_anova",
-    "src_tar", "g_knn_join", "m_curriculum_pacing",
-    # round-10 refloats: the four LM scorers re-planned by the v2
-    # LM-cache build (see _REFLOAT_MIN_ROUND) need post-refactor rows
-    "m_backoff_lm", "m_jm_interp_lm", "m_kneser_ney_lm",
-    # round-9 leads: this round's additions — float them so the fresh
-    # operators get driver confirmation this round (kept well under 20
-    # so ≥30 window slots keep draining the backlog, VERDICT r8 item 1)
-    "m_cc_pointer_jump", "m_witten_bell_lm", "m_split_leakage",
-    "m_theta_intersect", "src_zip", "src_xml", "m_embed_norm_audit",
-    "m_cuped",
-    # round-8 leads: the round-8 additions — float them so the
-    # fresh operators get driver confirmation this round
-    "m_graph_hits", "m_feature_mi", "q_chi_square", "m_lr_schedule",
-    "src_arrow_ipc", "m_graph_closeness", "m_kmv_distinct", "m_moe_balance",
-    "m_textrank_keywords", "m_simpson_diversity", "src_sequencefile",
-    "u_cogrouped_map", "m_wilson_bounds", "m_mcc",
-    "m_jsd_matrix", "m_cond_entropy", "m_burstiness",
-    "src_warc", "m_neg_sampling", "m_ldp_estimate",
-    "m_prefix_dedup", "m_ppl_buckets", "m_doremi_round", "m_best_of_n",
-    "src_varint_frames", "q_lateral_alias", "m_active_learning_margin",
-    "g_simplify_split",
-    # round-7 leads: the ten round-7 additions — float them so the
-    # fresh operators get driver confirmation this round, not after
-    # the ~110-ID backlog drains
-    "m_matryoshka_recall", "m_image_ahash", "m_epoch_cap_mix", "m_graph_lpa",
-    "m_audio_energy", "m_hash_walks", "m_train_val_embargo",
-    "src_fixed_width", "m_dedup_survivorship",
-    # round-6 leads (VERDICT r05 item 3): the two codec paths whose
-    # round-5 oracle upgrades (BMP decode / RIFF-WAVE decode) have only
-    # a stale r1 `no_oracle` driver row — float them so the upgraded
-    # oracle gets driver confirmation this round, not in ~3 rounds.
-    "m_multimodal_features", "m_audio_decode",
-    # round-5 leads: the r4 red row (fixed — now emits scalar columns)
-    # and the 8 rows-only->oracle upgrades whose only driver row is an
-    # r1 `err: no_oracle` (VERDICT r04 items 1 and 3).
-    "q_agg_approx_quantile",
-    "m_near_dedup", "m_simhash", "m_dedup_clusters",
-    "m_ann_lsh", "m_ann_ivf",
-    "g_point_in_poly", "g_wkb_serde", "g_geom_valid",
-    # round-3 additions (driver-checked r4)
-    "s_foreach_upsert", "s_static_join", "s_stream_union",
-    "s_slide_watermark",
-    "q_sql_q4", "q_sql_q14", "q_sql_q19",
-    "m_graph_cc", "m_token_entropy", "m_dup_ngram_frac",
-    "src_binaryfile", "g_nearest_hub",
-    "q_pivot", "m_vocab_coverage", "g_zorder_key",
-    "m_lm_cross_entropy",
-    "u_pandas_iter_udf", "q_join_range_binned", "src_partitioned_prune",
-    "q_sql_q7", "q_sql_q8", "q_winsorize", "g_track_length",
-    "q_funnel", "q_retention", "m_embed_centroid",
-    # newly oracle-ized (r03 row was err: no_oracle)
-    "s_watermark_late",
-    # round-4 additions land here, inside the 50-entry window
-    "g_reproject_epsg",
-    "q_sql_q9", "q_sql_q13", "q_sql_q15", "q_sql_q17", "q_sql_q22",
-    "q_mad", "m_source_mixture", "m_overlap_matrix",
-    "q_sql_q2", "q_sql_q11", "q_sql_q12", "q_sql_q16", "q_sql_q20",
-    "u_mapinarrow", "q_rollup_time", "s_archive_sink",
-    "q_sql_q21", "q_date_spine", "m_text_normalize", "src_text_lines",
-    "m_kmeans_step",
-    # never-driver-checked overflow: drains ~50/round via the rotation
-    "m_curation_pipeline", "g_bearing", "q_join_asof_fwd", "m_hard_negatives",
-    "q_win_count_distinct", "q_gaps_islands", "q_fill_forward",
-    "src_xml_roundtrip", "m_graph_bfs", "m_bloom_membership",
-    "m_corpus_stats", "g_geohash", "m_pq_quantize", "s_stream_left_join",
-    "m_ann_pq", "q_not_in_nulls", "q_join_asof_nearest",
-    "g_track_area", "m_ngram_containment", "m_label_outliers", "u_arrow_py_udf",
-    "m_temperature_mix", "src_schema_evolve", "sink_dynamic_overwrite",
-    "m_crossval_folds", "s_update_mode", "g_geohash_cells", "q_time_weighted_avg",
-    "m_boilerplate", "m_covariance_topk", "m_pca_power",
-    "q_trend_slope", "src_csv_malformed", "q_snapshot_diff", "m_knn_eval",
-    "q_markov_transitions", "s_chained_aggs", "src_py_datasource",
-    "sink_py_datasource", "s_py_source_stream", "q_mom_growth", "q_drawdown",
-    "u_udtf_table", "g_heat_decay", "m_vocab_curve", "q_profile_cardinality",
-    "m_triplet_mining", "m_span_corruption", "g_trajectory_stops",
-    "m_quality_sample", "q_setops_all", "m_apply_dedup", "m_ivf_balance", "g_cell_transitions", "m_zipf_stats", "g_reproject_inverse", "m_bigram_lm", "q_scd2_merge", "src_json_nested", "m_collocations", "m_quality_length_corr", "g_speed_anomaly", "m_freq_drift", "q_interval_coalesce", "sink_manifest",
-    "q_peak_detect", "q_ewma_fixed", "q_skyline", "q_attribution",
-    "m_hll_registers", "m_countmin", "m_inverted_index", "m_entity_match",
-    "m_link_predict", "m_perceptron_step", "sink_compact", "src_parquet_bloom",
-    "q_rfm", "q_cohort_matrix", "q_pareto_abc", "q_dq_checks", "q_autocorr",
-    "m_naive_bayes", "m_feature_hashing", "m_centroid_eval", "m_bpe_merges", "m_decision_stump", "src_parquet_meta",
-    "q_hierarchy_rollup", "m_bpe_apply", "q_quantile_hist", "g_hub_topk", "m_sim_histogram", "m_calibration_curve", "u_sql_udf", "u_sql_params", "q_join_shuffle_hash", "q_funnel_windowed", "m_ann_recall_eval", "q_session_stats", "g_tile_rollup", "m_budget_select", "q_top_movers", "m_embed_drift",
-    "q_collation", "q_pipe_sql", "s_stream_fullouter_join", "src_statestore",
-    "m_graph_kcore", "m_semdedup", "m_importance_resample", "s_event_timeout",
-    "q_recursive_cte", "q_sql_variables",
-    "q_ohlc", "q_group_by_all", "m_dp_count", "m_filter_sweep",
-    "s_stream_semi_join", "q_hist2d", "m_neyman_allocation",
-    "q_weighted_median", "m_reward_pairs", "m_adaboost_round", "src_gzip_text",
-    "q_sliding_distinct", "sink_maxrecords", "src_glob_recursive",
-    "g_rose_histogram", "g_trajectory_resample",
-    "m_cdc_chunks", "s_rate_source",
-    "m_tok_fertility", "m_embed_dim_quantiles", "q_multi_distinct",
-    "m_scaling_fit", "u_grouped_map",
-    "q_observe_metrics", "m_rater_kappa", "s_join_agg_chain",
-    "q_path_trigrams", "q_local_time_agg",
-    "m_langid_confusion", "m_filter_venn",
-    "q_key_skew_audit", "m_graph_assortativity", "m_rand_projection",
-    "m_hll_merge", "q_capped_running_sum",
-    "q_percent_of_parent", "u_pandas_window_agg", "m_jl_recall",
-    "sink_merge_on_read", "s_cdc_apply",
-    "m_stem_counts", "m_minmax_scale", "m_quantile_bins",
-    "q_new_vs_returning", "m_ngram_novelty",
-    "q_rolling_corr", "s_stream_minmax_scale",
-    "m_set_cover_greedy", "m_position_bias",
-    "g_morans_i", "q_runs_test", "q_seasonal_decompose",
-    "m_churn_labels", "q_conversion_lag", "s_dead_letter_split",
-    "m_shard_balance", "m_sft_pairs",
-    "q_max_concurrency", "m_filtered_knn",
-    "m_lsh_sweep", "g_adaptive_grid",
-    "src_wholetext", "m_upsample_plan", "s_warm_start_upsert",
-    "q_interarrival_hist", "q_basket_lift", "m_record_linkage_numeric",
-    "u_sql_table_udf", "q_audience_overlap", "m_dedup_policy_compare",
-    "q_month_end_arith", "q_try_arith", "m_incremental_dedup",
-    "q_null_routed_join", "m_pps_sample", "q_ks_test", "q_mann_whitney",
-    "q_spearman_stats", "q_theil_sen", "q_wilcoxon", "q_kendall_tau",
-    "g_zonal_stats", "q_cohort_ltv_curve",
-    # ---- already driver-green below (rotation pushes them to the
-    # ---- back automatically; order kept for stable bench diffs)
-    "q_agg_collect",
-    "src_kafka_shape", "s_stream_join",
-    "q_sql_q5", "q_sql_q6", "q_sql_q10", "q_sql_q18",
-    "q_agg_percentile", "q_grouping_id", "q_agg_mode",
-    "q_agg_percentile_disc", "q_agg_bitbool", "q_cte_reuse",
-    "q_agg_twophase_salted", "q_exists_subquery", "q_not_exists_subquery",
-    "q_lateral_topn", "q_join_nullsafe", "q_distinct_on",
-    "q_win_cume_nth", "q_scd2_intervals", "q_variant",
-    "m_chunk_tokens", "m_seq_pack", "m_passage_dedup",
-    "m_subsample", "m_class_balance",
-    "m_graph_pagerank", "m_graph_degree", "m_graph_triangles",
-    "m_frame_sample", "m_embed_norm_stats", "m_embed_quantize",
-    "m_tfidf", "m_doc_len_hist", "m_decontaminate", "m_pii_scrub",
-    "m_stratified_split", "m_doc_bigrams", "m_repetition", "m_bm25",
-    "src_jsonl_roundtrip", "src_csv_roundtrip", "src_orc_roundtrip",
-    "src_props_infer",
-    "g_wkt_roundtrip", "g_grid_agg",
-    "s_custom_state", "s_session_stream",
-]
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on sf0.001 (driver smoke check: rows > 0)."""
     return QUERIES[FLAGSHIP](spark, SMOKE_SF_DIR)
 
 
-# Physical-plan refloats (VERDICT r09 stretch item 7): IDs whose
-# implementation was REFACTORED after their latest driver row, mapped
-# to the first round whose rows post-date the refactor. A green row
-# from an earlier round is evidence about the OLD plan, so it does not
-# count — the ID floats back into the head-50 until a row from
-# >= the named round lands. Current entries: the four held-out LM
-# scorers, re-planned by the _heldout_lm_cache v2 build (round 10 —
-# unigram counts now derive from the checkpointed grams frame).
-# Maintenance rule: when refactoring a shipped operator's physical
-# plan, add/update its entry to the upcoming round number.
+# Physical-plan refloats: IDs whose plan was refactored after their
+# latest CORRECTNESS row, mapped to the first round whose rows post-date
+# the refactor. An older green row tested the old plan, so it does not
+# count until a row from >= that round lands. Maintenance rule: when
+# refactoring a shipped operator's physical plan, add it here with the
+# upcoming round number; delete the entry once a satisfying row lands.
+# tools/plan_audit.py flags a plan change with no entry.
 _REFLOAT_MIN_ROUND = {
-    "m_backoff_lm": 10,
-    "m_jm_interp_lm": 10,
-    "m_kneser_ney_lm": 10,
-    "m_witten_bell_lm": 10,
-    # round-10 re-plans (ADVICE r10): q_agg_percentile moved to the
-    # shared array-form percentile buffer (one agg buffer, new output
-    # projection) with no post-refactor driver row (latest r03) — it
-    # must refloat; g_dbscan_classify's re-plan DOES have an r10 row,
-    # the entry self-documents that the row post-dates the refactor.
-    "q_agg_percentile": 10,
-    "g_dbscan_classify": 11,  # r10 row, re-planned again in r11 (semi-join border probe)
-    # round-11 optimization re-plans: every operator whose EXECUTED
-    # computation changed this round (CTE-inlining fixes, shared
-    # MinHash/winnowing numpy kernels, the connected_components loop
-    # discipline, graph-kernel task-count + HITS/closeness re-plans)
-    # must earn a post-refactor driver row — old green rows tested the
-    # old plans.  The m_dedup_clusters consumers (survivorship/apply)
-    # inherit the re-plan through QUERIES["m_dedup_clusters"].
-    "m_near_dedup": 11,
-    "m_lsh_sweep": 11,
-    "m_incremental_dedup": 11,
-    "m_winnowing": 11,
-    "m_set_cover_greedy": 11,
-    "m_dedup_clusters": 11,
-    "m_dedup_survivorship": 11,
-    "m_apply_dedup": 11,
-    "m_graph_bfs": 11,
-    "m_graph_pagerank": 11,
-    "m_graph_hits": 11,
-    "m_graph_closeness": 11,
-    # round-11 batch 3: type-level MoE routing; _km_fit/_pq_encode/
-    # _bpe_train session memos + pins (all consumers re-planned);
-    # single-execution pins for simhash/entity-match/naive-bayes/DSIR;
-    # Arrow UDTFs; sink_py_stream explicit read-back schema.
-    "m_moe_balance": 11,
-    "m_kmeans_step": 11,
-    "m_cluster_purity": 11,
-    "m_coreset_sample": 11,
-    "m_pq_quantize": 11,
-    "m_ann_pq": 11,
-    "m_bpe_merges": 11,
-    "m_bpe_apply": 11,
-    "m_naive_bayes": 11,
-    "m_importance_resample": 11,
-    "m_simhash": 11,
-    "m_entity_match": 11,
-    "u_udtf": 11,
-    "u_udtf_polymorphic": 11,
-    "u_udtf_table": 11,
-    "sink_py_stream": 11,
-    # round-11 batch 4: bradley-terry loop pins; dbscan semi-join
-    # border probe; cdc kernel spread + digest-byte boundary test.
-    "m_bradley_terry": 11,
-    "m_cdc_chunks": 11,
-    # round-11 batch 5 (session 2): q20 per-part total re-aggregated
-    # from the pinned per-(supplier, part) sums; q21 flags pin;
-    # link-predict neighbor-list wedges + pinned degrees;
-    # dup-ngram-frac transform-built grams + pinned gram table;
-    # textrank lazy round pins.
-    "q_sql_q20": 11,
-    "q_sql_q21": 11,
-    "m_link_predict": 11,
-    "m_dup_ngram_frac": 11,
-    "m_textrank_keywords": 11,
-    # round-11 batch 6 (session 2): overlap-matrix transform-built
-    # trigrams + pinned gram table; CC/LPA/hash-walks lazy round pins
-    # (fixed iteration counts — one materializing cascade); KMV
-    # distinct-before-hash with the distinct-key table doubling as the
-    # true-count input.
-    "m_overlap_matrix": 11,
-    "m_graph_cc": 11,
-    "m_graph_lpa": 11,
-    "m_hash_walks": 11,
-    "m_kmv_distinct": 11,
-    # round-11 batch 7 (session 2): q2 min(struct) argmin; calibration
-    # winner/runner-up conditional aggregate; span-corruption staged
-    # split/index columns; PCA Arrow moment kernel; theta lazy pins.
-    "q_sql_q2": 11,
-    "m_calibration_curve": 11,
-    "m_span_corruption": 11,
-    "m_pca_power": 11,
-    "m_theta_intersect": 11,
-    # round-12: the r11 batch-8 collect_list aggregate REVERTED to the
-    # r10 count/row_number window — ObjectHashAggregate's sort-based
-    # fallback (>128 groups) made it 5.06 s in-pass / 11.38 s isolated
-    # in the driver's r11 pass (the round's one budget violation).
-    "g_knn_join": 12,
-    # round-11 batch 9 (session 2): recall-eval lazy pins (qv/ranked/
-    # exact each fed 2-4 consumers); novelty gram-table lazy pin;
-    # boilerplate + passage-dedup staged split columns (the
-    # per-element lambda re-evaluation trap).
-    "m_ann_recall_eval": 11,
-    "m_ngram_novelty": 11,
-    "m_boilerplate": 11,
-    "m_passage_dedup": 11,
-    # round-11 batch 10 (session 2): _centroid_dist session memo +
-    # lazy pin (seven consumers each rebuilt the explode + centroid
-    # fit + distance aggregate); m_centroid_eval argmin + pinned
-    # confusion table.
-    "m_centroid_eval": 11,
-    "m_active_learning_margin": 11,
-    "m_confusion_matrix": 11,
-    "m_active_learning_select": 11,
-    "m_decile_lift": 11,
-    "m_mcc": 11,
-    # _subseq_windows session memo + lazy pin (both consumers).
-    "q_subseq_search": 11,
-    "q_subseq_znorm": 11,
+    "q_join_theta_range": 13,
 }
 
 
@@ -332,12 +64,10 @@ def _driver_evidence(root: str | None = None) -> tuple[set[str], dict[str, int]]
     rows-only row (``err == 'no_oracle'`` with a row count) for queries
     that have no oracle by design. An ID upgraded rows-only->oracle
     after its last driver window is NOT green (its old row is weaker
-    than its current contract) and floats back into the head-50; an ID
-    in ``_REFLOAT_MIN_ROUND`` is green only if its satisfying row comes
-    from that round or later (pre-refactor rows tested a different
-    physical plan). Files are ordered by PARSED round number, never by
-    filename sort — an unpadded CORRECTNESS_r10.json must not lose to
-    r9 lexicographically (ADVICE r10)."""
+    than its current contract); an ID in ``_REFLOAT_MIN_ROUND`` is
+    green only if its satisfying row comes from that round or later.
+    Files are ordered by PARSED round number, never by filename sort —
+    an unpadded CORRECTNESS_r9.json must not beat r10."""
     import glob
     import json
     import os
@@ -377,36 +107,19 @@ def _driver_evidence(root: str | None = None) -> tuple[set[str], dict[str, int]]
     return green, latest_round
 
 
-def _driver_green(root: str | None = None) -> set[str]:
-    """Back-compat wrapper: just the green set from _driver_evidence."""
-    return _driver_evidence(root)[0]
-
-
 def _ordered_names(root: str | None = None) -> list[str]:
-    """Registry order for ``queries()``: never-driver-green IDs first
-    (in ``_QUEUE`` order), then the green tail by OLDEST satisfying
-    driver round first (queue order breaking ties). Once the backlog
-    drains below 50, window slots become re-confirmations — re-checking
-    the newest rows first is zero marginal information, so each round
-    refreshes the oldest-evidence third of the registry instead
-    (VERDICT r10 item 3)."""
-    queue = list(dict.fromkeys(
-        [n for n in _QUEUE if n in QUERIES] + list(QUERIES)
-    ))
+    """Order for ``queries()``, one stable sort of the registry: IDs
+    that are not green first, in registry order, then green IDs by
+    OLDEST satisfying round first. Each round's correctness gate checks
+    the first 50 IDs, so the window drains the unchecked backlog first
+    and then refreshes the stalest evidence."""
     green, rounds = _driver_evidence(root)
-    pos = {n: i for i, n in enumerate(queue)}
-    fresh = [n for n in queue if n not in green]
-    stale_first = sorted(
-        (n for n in queue if n in green),
-        key=lambda n: (rounds.get(n, 0), pos[n]),
-    )
-    return fresh + stale_first
+    return sorted(QUERIES, key=lambda n: (1, rounds[n]) if n in green else (0, 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Full registry, never-driver-green IDs first, green tail ordered
-    oldest-evidence-first — see ``_ordered_names``. Falls back to pure
-    queue order if no CORRECTNESS files exist (fresh clone)."""
+    """Full registry in ``_ordered_names`` order (pure registry order
+    when no CORRECTNESS files exist)."""
     return {n: QUERIES[n] for n in _ordered_names()}
 
 

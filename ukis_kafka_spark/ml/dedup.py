@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..registry import QUERIES, checkpoint_df, query
+from ..registry import QUERIES, checkpoint_df, query, session_memo
 from ..sources import load_table
 
 # MinHash parameters: 12 hashes = 4 bands × 3 rows. Small because the
@@ -33,20 +33,6 @@ _ROWS = _N_HASH // _BANDS
 # fixed odd constants (deterministic across runs — no RNG at plan time)
 _AS = [(2 * i * 0x9E3779B1 + 1) % _P for i in range(1, _N_HASH + 1)]
 _BS = [(i * 0x85EBCA77 + 7) % _P for i in range(1, _N_HASH + 1)]
-
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Explicit repartition to core count before a CPU-heavy Python
-    kernel: the corpus parquet is ONE file, so the kernel otherwise
-    runs in a single task. Worth it ONLY when the kernel is a slow
-    per-row Python loop (m_cdc_chunks: an md5 per position, measured
-    2.8 -> 1.7 s); for the vectorized numpy batch kernels (MinHash,
-    SimHash, winnowing) the extra text shuffle is a wash — A/B'd and
-    left unspread. repartition(n) with an explicit count is
-    AQE-coalescing-proof; results are per-row / key-aggregated
-    (partition-invariant). Scale-adaptive via defaultParallelism."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _shingles(toks_col: F.Column, k: int = 3) -> F.Column:
@@ -630,6 +616,7 @@ FROM l{_CLUSTER_ORACLE_ROUNDS}"""
 
 
 @query("m_dedup_clusters", oracle=_dedup_clusters_oracle())
+@session_memo("documents")
 def m_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate cluster resolution — the step after pair finding
     in a real dedup pipeline: MinHash pairs → connected components →
@@ -646,24 +633,17 @@ def m_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains (shingle drift at 100 TB) connected_components_jump /
     m_cc_pointer_jump is the O(log diameter) variant — its planted
     64-chain test shows exactly where a fixed-round resolve breaks."""
-    # r11: session memo — m_dedup_survivorship and m_apply_dedup both
+    # Session-memoized: m_dedup_survivorship and m_apply_dedup both
     # re-derive this whole MinHash→CC pipeline through
-    # QUERIES["m_dedup_clusters"]; resolve it once per run (in-session
-    # only, never persisted) and pin the bounded cluster table.
-    memo = getattr(spark, "_ukis_clusters_memo", None)
-    if memo is None:
-        memo = {}
-        spark._ukis_clusters_memo = memo
-    if sf_dir in memo:
-        return memo[sf_dir]
+    # QUERIES["m_dedup_clusters"]; resolve it once and pin the bounded
+    # cluster table.
     pairs = QUERIES["m_near_dedup"](spark, sf_dir).select("id_a", "id_b")
     comp = connected_components(pairs)
-    memo[sf_dir] = comp.select(
+    return comp.select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),
         (F.col("node") == F.col("component")).alias("is_survivor"),
     ).transform(lambda df: checkpoint_df(df, eager=False))
-    return memo[sf_dir]
 
 
 def _survivorship_oracle() -> str:

@@ -26,23 +26,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..registry import checkpoint_df, query
+from ..registry import checkpoint_df, query, session_memo
 from ..sources import load_table
 
 _DIM = 64
-
-
-def _as_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
-
-
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product in double precision."""
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _norm(arr: Column) -> Column:
@@ -802,23 +789,17 @@ FROM assign{last} a
 GROUP BY a.cluster"""
 
 
+@session_memo("embeddings")
 def _km_fit(spark: SparkSession, sf_dir: str):
     """Spark twin of _km_cte(): quantize, seed, run _KM_ROUNDS Lloyd
     rounds.  Returns (q, assign, cent): the exploded quantized
     (vec_id, d, v) table, the final-round assignment, and the final
     centroid table — the shared scaffold for every kmeans-derived
     operator (step summary, purity, coreset)."""
-    # r11: session memo + lazy pins, same rationale as _pq_encode — the
+    # Session memo + lazy pins, same rationale as _pq_encode — the
     # three fit consumers (m_kmeans_step, m_cluster_purity,
-    # m_coreset_sample) share one fit per run, and the quantized
-    # expansion is pinned before the rounds so each round reads one
-    # compiled subtree. In-session only, never persisted.
-    memo = getattr(spark, "_ukis_km_memo", None)
-    if memo is None:
-        memo = {}
-        spark._ukis_km_memo = memo
-    if sf_dir in memo:
-        return memo[sf_dir]
+    # m_coreset_sample) share one fit, and the quantized expansion is
+    # pinned before the rounds so each round reads one compiled subtree.
     e = load_table(spark, sf_dir, "embeddings")
     q = (
         e.select(
@@ -854,8 +835,7 @@ def _km_fit(spark: SparkSession, sf_dir: str):
             .agg(F.expr("sum(v) div count(1)").alias("c"))
         )
     lazy = lambda df: checkpoint_df(df, eager=False)  # noqa: E731
-    memo[sf_dir] = (q, assign.transform(lazy), cent.transform(lazy))
-    return memo[sf_dir]
+    return q, assign.transform(lazy), cent.transform(lazy)
 
 
 @query("m_kmeans_step", oracle=_km_oracle())
@@ -958,7 +938,6 @@ def m_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_BLOCKS = 8  # 64 dims → 8 sub-vectors of 8 dims
 _PQ_K = 16      # codewords per sub-space → 4-bit codes, 32-bit total
 
 
@@ -1014,23 +993,17 @@ GROUP BY vec_id
 """
 
 
+@session_memo("embeddings")
 def _pq_encode(spark: SparkSession, sf_dir: str):
     """Shared PQ fit+encode: returns (q, codebook, assignment) where
     ``q`` is the fixed-point (vec_id, d, b, v) expansion, ``codebook``
     the refined (cl, d, c) table, and ``assignment`` the per-(vec,
     block) codeword with its squared distance. See m_pq_quantize for
     the determinism argument."""
-    # r11: session memo + lazy pins — both PQ consumers (m_pq_quantize,
-    # m_ann_pq) share one fit within a run, and each consumer's own
-    # multi-branch reads of q/assign execute the Lloyd lineage once
-    # instead of once per branch. In-session only (never persisted):
-    # every bench/oracle invocation recomputes from the parquet inputs.
-    memo = getattr(spark, "_ukis_pq_memo", None)
-    if memo is None:
-        memo = {}
-        spark._ukis_pq_memo = memo
-    if sf_dir in memo:
-        return memo[sf_dir]
+    # Session memo + lazy pins — both PQ consumers (m_pq_quantize,
+    # m_ann_pq) share one fit, and each consumer's own multi-branch
+    # reads of q/assign execute the Lloyd lineage once instead of once
+    # per branch.
     e = load_table(spark, sf_dir, "embeddings")
     q = (
         e.select(
@@ -1073,8 +1046,7 @@ def _pq_encode(spark: SparkSession, sf_dir: str):
                 .agg(F.expr("sum(v) div count(1)").alias("c"))
             )
     lazy = lambda df: checkpoint_df(df, eager=False)  # noqa: E731
-    memo[sf_dir] = (q, cb.transform(lazy), assign.transform(lazy))
-    return memo[sf_dir]
+    return q, cb.transform(lazy), assign.transform(lazy)
 
 
 @query("m_pq_quantize", oracle=_pq_oracle())
@@ -1817,23 +1789,16 @@ def m_perceptron_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo("embeddings")
 def _centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared nearest-centroid distance table: every vector's exact
     integer L2 to every label centroid (see m_centroid_eval).
 
-    r11: session memo + lazy pin (the _km_fit/_pq_encode pattern) —
-    SIX registry operators read this table and each rebuilt the
-    explode + centroid fit + distance aggregate; now the first
-    consumer's job materializes the pinned table once per
-    (session, corpus) and the rest read it. In-session only, never
-    persisted — every bench/oracle invocation recomputes from parquet.
+    Session memo + lazy pin (the _km_fit/_pq_encode pattern): SIX
+    registry operators read this table; the first consumer's job
+    materializes the pinned table once per (session, corpus) and the
+    rest read it.
     """
-    memo = getattr(spark, "_ukis_centroid_memo", None)
-    if memo is None:
-        memo = {}
-        spark._ukis_centroid_memo = memo
-    if sf_dir in memo:
-        return memo[sf_dir]
     e = load_table(spark, sf_dir, "embeddings")
     q = e.select(
         "vec_id",
@@ -1855,14 +1820,12 @@ def _centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     diff = F.col("v") * 1000 - F.col("c_milli")
-    dist = (
+    return (
         q.join(F.broadcast(cent), "d")
         .groupBy("vec_id", F.col("label").alias("true_label"), "c_label")
         .agg(F.sum(diff * diff).alias("d2"))
         .transform(lambda df: checkpoint_df(df, eager=False))
     )
-    memo[sf_dir] = dist
-    return dist
 
 
 _CENTROID_CTE = """

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import checkpoint_df, query
+from ..registry import checkpoint_df, query, session_memo
 from ..sources import load_table
 
 MOD = 1_000_000_007
@@ -3142,23 +3142,17 @@ def _bpe_oracle() -> str:
     return _bpe_cte_chain() + "\n" + rows
 
 
+@session_memo("documents")
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """Shared BPE training loop: returns (final words DF after
     _BPE_ROUNDS merges, list of per-round summary DFs).
 
-    r11: session-memoized (both consumers — m_bpe_merges and
-    m_bpe_apply — train once per run) and checkpoint-disciplined: each
-    round's ``words`` and 1-row ``best`` are lazily pinned, so the
-    round-r lineage reads round r-1's pin instead of re-planning its
-    whole subtree through BOTH the argmax branch and the merge branch
-    (the m_epoch_cap_mix CTE-inlining blowup — this loop carried 84
-    Exchanges before). In-session only, never persisted."""
-    memo = getattr(spark, "_ukis_bpe_memo", None)
-    if memo is None:
-        memo = {}
-        spark._ukis_bpe_memo = memo
-    if sf_dir in memo:
-        return memo[sf_dir]
+    Session-memoized (both consumers — m_bpe_merges and m_bpe_apply —
+    train once) and checkpoint-disciplined: each round's ``words`` and
+    1-row ``best`` are lazily pinned, so the round-r lineage reads
+    round r-1's pin instead of re-planning its whole subtree through
+    BOTH the argmax branch and the merge branch (the m_epoch_cap_mix
+    CTE-inlining blowup — this loop carried 84 Exchanges before)."""
     lazy = lambda df: checkpoint_df(df, eager=False)  # noqa: E731
     d = load_table(spark, sf_dir, "documents")
     words = (
@@ -3221,8 +3215,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
             )
         )
         words = words.select("w", "c", "s")
-    memo[sf_dir] = (words, out_rows)
-    return memo[sf_dir]
+    return words, out_rows
 
 
 @query("m_bpe_merges", oracle=_bpe_oracle())

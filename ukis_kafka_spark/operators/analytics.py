@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import query, session_memo
 from ..sources import load_table
 
 DEC = "decimal(28,10)"
@@ -3085,23 +3085,16 @@ win AS (
 )"""
 
 
+@session_memo("events")
 def _subseq_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 8-wide sliding windows (``wv``) with the broadcast
     query pattern (``p``) attached — the Spark twin of
     SUBSEQ_ORACLE_PREFIX.
 
-    r11: session memo + lazy pin (the _centroid_dist pattern) — both
-    subsequence operators rebuilt the scan + per-user window;
-    in-session only, never persisted."""
+    Session-memoized with a lazy pin: both subsequence operators read
+    the one scan + per-user window."""
     from ..registry import checkpoint_df as _ck
     from ..sources import load_table as _lt
-
-    memo = getattr(spark, "_ukis_subseq_memo", None)
-    if memo is None:
-        memo = {}
-        spark._ukis_subseq_memo = memo
-    if sf_dir in memo:
-        return memo[sf_dir]
 
     ev = _lt(spark, sf_dir, "events").select(
         "user_id",
@@ -3117,14 +3110,12 @@ def _subseq_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("event_id").rowsBetween(
         Window.currentRow, 7
     )
-    out = (
+    return (
         ev.withColumn("wv", F.collect_list("v").over(w))
         .where(F.size("wv") == 8)
         .crossJoin(F.broadcast(pat))
         .transform(lambda df: _ck(df, eager=False))
     )
-    memo[sf_dir] = out
-    return out
 
 
 @query(

@@ -177,9 +177,10 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin — the correct strategy: the fact side
     streams once with no shuffle."""
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
-    bands = spark.createDataFrame(
-        [("low", 0.0, 50000.0), ("mid", 50000.0, 150000.0), ("high", 150000.0, 300000.0)],
-        "band_name string, lo double, hi double",
+    # SQL VALUES plans as a LocalTableScan (no pickled-RDD scan)
+    bands = spark.sql(
+        "SELECT * FROM VALUES ('low', 0D, 50000D), ('mid', 50000D, 150000D),"
+        " ('high', 150000D, 300000D) AS b(band_name, lo, hi)"
     )
     return o.join(
         F.broadcast(bands),

@@ -11,10 +11,13 @@ which the driver then checks rows-only).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .cache import table_fingerprint
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -119,6 +122,29 @@ def checkpoint_df(df: DataFrame, *, eager: bool = True) -> DataFrame:
             sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def session_memo(table: str) -> Callable[[Callable], Callable]:
+    """Memoize ``fn(spark, sf_dir)`` for the life of ``spark``.
+
+    For shared fits and pinned frames that several operators read: the
+    first caller builds, the rest reuse. The key is the fingerprint
+    (path, size, mtime) of the corpus ``table`` the build reads, so a
+    table rewritten at the same path is rebuilt, never served stale.
+    In-session only: nothing is persisted."""
+
+    def deco(fn: Callable) -> Callable:
+        @functools.wraps(fn)
+        def memoized(spark: SparkSession, sf_dir: str):
+            memo = spark.__dict__.setdefault("_ukis_memo", {})
+            key = (fn.__module__, fn.__qualname__, table_fingerprint(sf_dir, table))
+            if key not in memo:
+                memo[key] = fn(spark, sf_dir)
+            return memo[key]
+
+        return memoized
+
+    return deco
 
 
 def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryFn]:

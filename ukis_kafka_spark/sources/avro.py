@@ -37,7 +37,6 @@ import zlib
 from typing import Any, Dict, Iterator, List, Tuple
 
 MAGIC = b"Obj\x01"
-_SIMPLE = {"boolean", "int", "long", "float", "double", "string", "bytes"}
 
 
 # ---------------------------------------------------------------- encoding

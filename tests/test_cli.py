@@ -69,6 +69,124 @@ def test_cli_produce_consume_roundtrip(spark, tmp_path):
     assert decode_wkb(bytes(fid4[0]["wkb"])) == ("POINT", (10.0, 50.0))
 
 
+def test_cli_consume_upsert_drops_keyless_features(spark, tmp_path, capsys):
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=6)
+    fc = json.loads(gj.read_text())
+    for f in fc["features"][1:3]:  # fids 1 and 2 lose their key
+        del f["properties"]["fid"]
+    gj.write_text(json.dumps(fc))
+    topic = str(tmp_path / "topic")
+    table = str(tmp_path / "table")
+
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+    capsys.readouterr()
+    assert cli.main(["consume-upsert", "--topic-dir", topic, "--table", table]) == 0
+    out = capsys.readouterr().out
+    assert "warning: dropping 2 features without a 'fid' property" in out
+    assert "now 4 rows" in out
+    fids = sorted(json.loads(r["props_json"])["fid"] for r in spark.read.parquet(table).collect())
+    assert fids == [0, 3, 4, 5]
+
+
+def _write_legacy_topic(spark, topic: str, fids: list[int]) -> None:
+    """A pre-offset topic file: the ``value`` column only."""
+    import pandas as pd
+
+    from ukis_kafka_spark.sources.envelope import make_envelope
+    from ukis_kafka_spark.spatial.wkb import encode_wkb
+
+    envelopes = [
+        make_envelope(encode_wkb(("POINT", (0.0, float(f)))), {"fid": f}, layer="pts")
+        for f in fids
+    ]
+    spark.createDataFrame(
+        pd.DataFrame({"value": pd.Series(envelopes, dtype=object)}), "value binary"
+    ).write.parquet(topic)
+
+
+def test_cli_mixed_legacy_topic_offset_bearing_message_wins(spark, tmp_path):
+    """A topic dir holding a value-only file plus produced (offset-bearing)
+    files: the legacy rows read offset NULL and lose last-write-wins to a
+    re-delivery of the same fid."""
+    from ukis_kafka_spark.spatial.wkb import decode_wkb
+
+    topic = str(tmp_path / "topic")
+    _write_legacy_topic(spark, topic, [0, 1])
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=2, start=1)  # fid 1 re-delivered at (10, 50), fid 2 new
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic, "--layer", "pts"]) == 0
+
+    table = str(tmp_path / "table")
+    assert cli.main(["consume-upsert", "--topic-dir", topic, "--table", table]) == 0
+    by_fid = {
+        json.loads(r["props_json"])["fid"]: decode_wkb(bytes(r["wkb"]))
+        for r in spark.read.parquet(table).collect()
+    }
+    assert by_fid == {
+        0: ("POINT", (0.0, 0.0)),
+        1: ("POINT", (10.0, 50.0)),
+        2: ("POINT", (11.0, 51.0)),
+    }
+
+    out = str(tmp_path / "sink")
+    assert cli.main(["consume-files", "--topic-dir", topic, "--out", out]) == 0
+    offsets = [
+        (json.loads(r["props_json"])["fid"], r["offset"]) for r in spark.read.parquet(out).collect()
+    ]
+    # the produce continued from the topic's 2 legacy rows
+    assert len(offsets) == 4
+    assert set(offsets) == {(0, None), (1, None), (1, 2), (2, 3)}
+
+
+def test_cli_all_legacy_topic_consumes_with_null_offsets(spark, tmp_path):
+    topic = str(tmp_path / "topic")
+    _write_legacy_topic(spark, topic, [0, 1, 2])
+
+    out = str(tmp_path / "sink")
+    assert cli.main(["consume-files", "--topic-dir", topic, "--out", out]) == 0
+    rows = spark.read.parquet(out).collect()
+    assert len(rows) == 3 and {r["offset"] for r in rows} == {None}
+
+    table = str(tmp_path / "table")
+    assert cli.main(["consume-upsert", "--topic-dir", topic, "--table", table]) == 0
+    assert spark.read.parquet(table).count() == 3
+
+
+def test_cli_consumers_stay_single_pass(spark, tmp_path):
+    """Job-count guard: consume-files is one job, a consume-upsert into
+    an existing table at most three — a count or decode that re-reads
+    the topic or the output adds jobs and fails here."""
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=5)
+    topic = str(tmp_path / "topic")
+    table = str(tmp_path / "table")
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+    assert cli.main(["consume-upsert", "--topic-dir", topic, "--table", table]) == 0
+
+    sc = spark.sparkContext
+
+    def jobs(group: str, argv: list[str]) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            assert cli.main(argv) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_files = jobs(
+        f"single-pass-files-{id(tmp_path)}",
+        ["consume-files", "--topic-dir", topic, "--out", str(tmp_path / "sink")],
+    )
+    n_upsert = jobs(
+        f"single-pass-upsert-{id(tmp_path)}",
+        ["consume-upsert", "--topic-dir", topic, "--table", table],
+    )
+    assert n_files == 1
+    assert 1 <= n_upsert <= 3
+
+
 def test_pipeline_demo_runs(spark):
     import subprocess
     import sys

@@ -131,6 +131,42 @@ def test_upsert_parquet_seq_col_last_write_wins(spark, tmp_path):
     assert set(spark.read.parquet(path).columns) == {"k", "v"}
 
 
+def test_upsert_parquet_returns_merged_row_count(spark, tmp_path):
+    from ukis_kafka_spark.sinks.files import upsert_parquet
+
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    path = str(tmp_path / "t")
+    base.write.parquet(path)
+    updates = spark.createDataFrame(
+        [(2, "B", 5), (2, "BB", 6), (3, "c", 7), (4, "d", 8)], "k long, v string, off long"
+    )
+    n = upsert_parquet(spark, spark.read.parquet(path), updates, ["k"], path, seq_col="off")
+    assert isinstance(n, int)
+    assert n == spark.read.parquet(path).count() == 4
+    no_seq = spark.createDataFrame([(5, "e")], "k long, v string")
+    n = upsert_parquet(spark, spark.read.parquet(path), no_seq, ["k"], path)
+    assert n == spark.read.parquet(path).count() == 5
+
+
+def test_upsert_parquet_merge_is_one_window_one_shuffle(spark):
+    """With seq_col, the dedup of the updates and the base-vs-update
+    merge share one window over one key exchange."""
+    from ukis_kafka_spark.sinks.files import _merge_by_key
+
+    base = spark.createDataFrame([(1, "a")], "k long, v string")
+    updates = spark.createDataFrame([(1, "A", 3), (1, "AA", 4)], "k long, v string, off long")
+    plan = (
+        _merge_by_key(base, updates, ["k"], seq_col="off")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    windows = [l for l in plan.splitlines() if "Window [" in l]
+    exchanges = [l for l in plan.splitlines() if "Exchange hashpartitioning(k" in l]
+    assert len(windows) == 1, plan
+    assert len(exchanges) == 1, plan
+
+
 def test_upsert_parquet_crash_safe_swap_leaves_no_debris(spark, tmp_path):
     from ukis_kafka_spark.sinks.files import upsert_parquet
 

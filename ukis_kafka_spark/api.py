@@ -53,6 +53,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # tools/plan_audit.py flags a plan change with no entry.
 _REFLOAT_MIN_ROUND = {
     "q_join_theta_range": 13,
+    "s_foreach_upsert": 13,
+    "s_warm_start_upsert": 13,
+    "sink_upsert": 13,
+    "src_gpkg_roundtrip": 13,
 }
 
 

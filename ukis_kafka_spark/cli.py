@@ -15,7 +15,8 @@ The producer reads GeoJSON with the stdlib (the reference uses OGR;
 GeoJSON is the library-free common denominator), converts geometries
 to WKB with the pure-Python codec, and wraps each feature in the
 msgpack envelope. Consumers decode with mapInPandas and run the R7/R8
-sinks.
+sinks; each consumer scans and decodes its topic once, and every count
+it prints is observed on its one write.
 """
 
 from __future__ import annotations
@@ -25,6 +26,9 @@ import json
 import sys
 
 import pandas as pd
+
+# the topic message shape; pre-offset (legacy) files read offset NULL
+_TOPIC_SCHEMA = "value binary, offset long"
 
 
 def _geojson_geom_to_wkb(geom: dict) -> bytes:
@@ -78,7 +82,7 @@ def _publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
     spark = get_spark("cli-produce")
     base_off = 0
     if os.path.isdir(topic_dir):
-        base_off = spark.read.parquet(topic_dir).count()
+        base_off = spark.read.schema(_TOPIC_SCHEMA).parquet(topic_dir).count()
     df = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -86,7 +90,7 @@ def _publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
                 "offset": range(base_off, base_off + len(envelopes)),
             }
         ),
-        schema="value binary, offset long",
+        schema=_TOPIC_SCHEMA,
     )
     df.write.mode("append").parquet(topic_dir)
     print(f"produced {len(envelopes)} features to {topic_dir}")
@@ -187,20 +191,16 @@ def cmd_produce_gpkg(args: argparse.Namespace) -> int:
 
 
 def _decoded_features(spark, topic_dir: str):
-    from pyspark.sql import functions as F
-
     from .sources.envelope import read_envelope
     from .spatial.wkb import decode_wkb
 
-    # mergeSchema: a topic dir may mix pre-offset files with
-    # offset-bearing ones (appends to an old topic); without it Spark
-    # resolves the schema from one arbitrary file's footer and could
-    # silently drop the offset column — old rows read offset NULL,
+    # explicit schema: no footer-inference job, and a topic dir that
+    # mixes pre-offset files with offset-bearing ones (appends to an old
+    # topic) reads the same way whichever footer Spark would have picked
+    # — a legacy file lacks the column, so its rows read offset NULL,
     # which loses to any real offset under the desc last-write-wins
     # window (nulls sort last), exactly the right semantics
-    raw = spark.read.option("mergeSchema", "true").parquet(topic_dir)
-    if "offset" not in raw.columns:  # all-pre-offset topic dirs remain readable
-        raw = raw.withColumn("offset", F.lit(-1).cast("long"))
+    raw = spark.read.schema(_TOPIC_SCHEMA).parquet(topic_dir)
 
     def decode(iter_pdf):
         for pdf in iter_pdf:
@@ -224,15 +224,19 @@ def _decoded_features(spark, topic_dir: str):
 
 def cmd_consume_files(args: argparse.Namespace) -> int:
     """R8: topic → partitioned filesystem sink."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from .plans import get_spark
 
     spark = get_spark("cli-consume-files")
+    obs = Observation()
     feats = _decoded_features(spark, args.topic_dir)
-    writer = feats.write.mode("overwrite")
+    writer = feats.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
     if args.partition_by:
         writer = writer.partitionBy(*args.partition_by.split(","))
     writer.parquet(args.out)
-    print(f"wrote {spark.read.parquet(args.out).count()} features to {args.out}")
+    print(f"wrote {obs.get['n']} features to {args.out}")
     return 0
 
 
@@ -240,6 +244,7 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     """R7+R9: topic → keyed upsert (idempotent re-delivery)."""
     import os
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .plans import get_spark
@@ -249,21 +254,24 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     feats = _decoded_features(spark, args.topic_dir).withColumn(
         "fid", F.get_json_object("props_json", f"$.{args.key}")
     )
-    # keyless features cannot be upserted idempotently; dropping them is
-    # explicit (a NULL key would otherwise collapse them into one row)
-    n_keyless = feats.where(F.col("fid").isNull()).count()
-    if n_keyless:
-        print(f"warning: dropping {n_keyless} features without a '{args.key}' property")
-        feats = feats.where(F.col("fid").isNotNull())
     if os.path.exists(args.table):
         base = spark.read.parquet(args.table)
-    else:
-        feats.drop("offset").limit(0).write.parquet(args.table)
-        base = spark.read.parquet(args.table)
+    else:  # first consume: an empty base (LIMIT 0 plans no scan)
+        base = feats.drop("offset").limit(0)
+    # keyless features cannot be upserted idempotently; dropping them is
+    # explicit (a NULL key would otherwise collapse them into one row),
+    # and counted on the upsert's own write rather than by a second scan
+    obs = Observation()
+    feats = feats.observe(obs, F.count(F.when(F.col("fid").isNull(), 1)).alias("n")).where(
+        F.col("fid").isNotNull()
+    )
     # offset-order last-write-wins: re-delivered same-key messages in
     # one batch resolve to the latest produce, like the reference consumer
-    upsert_parquet(spark, base, feats, ["fid"], args.table, seq_col="offset")
-    print(f"upserted into {args.table}; now {spark.read.parquet(args.table).count()} rows")
+    n_rows = upsert_parquet(spark, base, feats, ["fid"], args.table, seq_col="offset")
+    n_keyless = obs.get["n"]
+    if n_keyless:
+        print(f"warning: dropping {n_keyless} features without a '{args.key}' property")
+    print(f"upserted into {args.table}; now {n_rows} rows")
     return 0
 
 

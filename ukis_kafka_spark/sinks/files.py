@@ -15,7 +15,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -39,47 +39,54 @@ def upsert_parquet(
     keys: list[str],
     path: str,
     seq_col: str | None = None,
-) -> None:
+) -> int:
     """MERGE-by-key into a parquet target: rows from ``updates`` win
-    over ``base`` on key collision, new keys are inserted.
+    over ``base`` on key collision, new keys are inserted. Returns the
+    merged table's row count, observed on the write (no re-read).
 
     Duplicate keys *within* ``updates``: pass ``seq_col`` naming a
     monotonic source-order column (the Kafka offset in the consumer
     path) and the highest-sequence row wins — the reference consumer's
-    offset-order last-write-wins. Without ``seq_col``, updates must be
-    key-unique; ties would otherwise pick an arbitrary row.
+    offset-order last-write-wins; NULL sequences sort last. Without
+    ``seq_col``, updates must be key-unique; ties would otherwise pick
+    an arbitrary row.
 
-    Implementation: tag priority → union → keep rank-1 per key →
-    write to a fresh directory → two-rename swap. The swap is not
-    atomic for concurrent readers (that needs a metastore / Delta log);
-    it is crash-safe: the previous table survives at ``path + '._old'``
-    until the new one is in place, so no crash point loses data, and
-    the target is absent only for the duration of one directory rename
-    (never a recursive delete)."""
-    if seq_col is not None:
-        w_u = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc())
-        updates = (
-            updates.withColumn("_urn", F.row_number().over(w_u))
-            .where(F.col("_urn") == 1)
-            .drop("_urn", seq_col)
-        )
-    tagged = base.withColumn("_prio", F.lit(1)).unionByName(
-        updates.withColumn("_prio", F.lit(0))
-    )
-    w = Window.partitionBy(*keys).orderBy(F.col("_prio").asc())
-    merged = (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_prio", "_rn")
-    )
+    Implementation: tag priority → union → keep rank-1 per key under
+    ONE window ordered by (priority asc, ``seq_col`` desc; base rows
+    carry a NULL ``seq_col``) → write to a fresh directory → two-rename
+    swap. The swap is not atomic for concurrent readers (that needs a
+    metastore / Delta log); it is crash-safe: the previous table
+    survives at ``path + '._old'`` until the new one is in place, so no
+    crash point loses data, and the target is absent only for the
+    duration of one directory rename (never a recursive delete)."""
+    merged = _merge_by_key(base, updates, keys, seq_col)
+    obs = Observation()
     tmp, old = path + "._new", path + "._old"
-    merged.write.mode("overwrite").parquet(tmp)
+    merged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(tmp)
     if os.path.exists(old):
         shutil.rmtree(old)
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
+    return obs.get["n"]
+
+
+def _merge_by_key(
+    base: DataFrame, updates: DataFrame, keys: list[str], seq_col: str | None = None
+) -> DataFrame:
+    """The merge plan :func:`upsert_parquet` writes: one key shuffle,
+    one window."""
+    order, drop = [F.col("_prio").asc()], ["_prio", "_rn"]
+    if seq_col is not None:
+        base = base.withColumn(seq_col, F.lit(None).cast(updates.schema[seq_col].dataType))
+        order.append(F.col(seq_col).desc())
+        drop.append(seq_col)
+    tagged = base.withColumn("_prio", F.lit(1)).unionByName(
+        updates.withColumn("_prio", F.lit(0))
+    )
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return tagged.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop(*drop)
 
 
 @query(

@@ -35,6 +35,7 @@ def test_cli_produce_consume_roundtrip(spark, tmp_path):
     assert cli.main(["consume-files", "--topic-dir", topic, "--out", out]) == 0
 
     feats = spark.read.parquet(out)
+    assert feats.columns == ["srid", "geom_type", "wkb", "props_json", "offset", "layer"]
     rows = feats.collect()
     assert len(rows) == 5
     assert {r["layer"] for r in rows} == {"pts"}
@@ -87,6 +88,70 @@ def test_cli_consume_upsert_drops_keyless_features(spark, tmp_path, capsys):
     assert "now 4 rows" in out
     fids = sorted(json.loads(r["props_json"])["fid"] for r in spark.read.parquet(table).collect())
     assert fids == [0, 3, 4, 5]
+
+
+def test_cli_produce_skips_null_geometry(spark, tmp_path, capsys):
+    """RFC 7946 §3.2 allows ``"geometry": null``; such a feature is
+    skipped, like a null shape in produce-shp or produce-gpkg."""
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=3)
+    fc = json.loads(gj.read_text())
+    fc["features"][1]["geometry"] = None
+    gj.write_text(json.dumps(fc))
+    topic = str(tmp_path / "topic")
+
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+    assert f"produced 2 features to {topic}" in capsys.readouterr().out
+
+
+def test_cli_produce_unsupported_type_writes_nothing(spark, tmp_path):
+    """Every envelope is built before the topic dir is touched: a bad
+    feature fails the produce with nothing written."""
+    import os
+
+    import pytest
+
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=3)
+    fc = json.loads(gj.read_text())
+    fc["features"][2]["geometry"] = {
+        "type": "GeometryCollection",
+        "geometries": [{"type": "Point", "coordinates": [0.0, 0.0]}],
+    }
+    gj.write_text(json.dumps(fc))
+    topic = str(tmp_path / "topic")
+
+    with pytest.raises(ValueError, match="unsupported GeoJSON geometry type: GEOMETRYCOLLECTION"):
+        cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic])
+    assert not os.path.exists(topic)
+
+
+def test_no_package_module_imports_cli():
+    """Layering guard: the CLI sits on top of the package; no other
+    package module may import it."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(cli.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "cli.py":
+            continue
+        # a module's dotted path; level-N relative imports drop N parts
+        # (for __init__.py the first drop lands on its own package)
+        parts = ["ukis_kafka_spark", *path.relative_to(pkg).with_suffix("").parts]
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = parts[: len(parts) - node.level] if node.level else []
+                mod = ".".join(base + ([node.module] if node.module else []))
+                mods = [mod] + [f"{mod}.{a.name}" for a in node.names]
+            else:
+                continue
+            if "ukis_kafka_spark.cli" in mods:
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
 
 
 def _write_legacy_topic(spark, topic: str, fids: list[int]) -> None:

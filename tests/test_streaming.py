@@ -717,7 +717,7 @@ def test_kafka_source_online(spark):
 
     from pyspark.sql import functions as F
 
-    feats = decode_feature_stream(raw, include_geom=False)
+    feats = decode_feature_stream(raw)
     decoded = feats.select(
         F.from_json(
             "props_json", "event_id long, event_type string, value double"

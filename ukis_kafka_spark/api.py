@@ -57,6 +57,7 @@ _REFLOAT_MIN_ROUND = {
     "s_warm_start_upsert": 13,
     "sink_upsert": 13,
     "src_gpkg_roundtrip": 13,
+    "src_kafka_shape": 13,
 }
 
 

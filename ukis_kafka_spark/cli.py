@@ -3,18 +3,22 @@ CLIs (SURVEY.md §3.1: producer vector-file→Kafka, consumer
 Kafka→PostGIS, consumer Kafka→filesystem), re-based on Spark.
 
 Offline, a "topic" is a directory of parquet files holding the binary
-``value`` column (the exact Kafka message shape); with a broker, swap
-the directory for ``format("kafka")`` via sources.kafka.
+``value`` column (the exact Kafka message shape) and its ``offset``
+(sources.kafka.TOPIC_SCHEMA); with a broker, swap the directory for
+``format("kafka")`` via sources.kafka.
 
     python -m ukis_kafka_spark.cli produce  --geojson in.geojson --topic-dir /x/topic --layer roads
     python -m ukis_kafka_spark.cli produce-wkt --csv in.csv --wkt-col WKT --topic-dir /x/topic --layer roads
     python -m ukis_kafka_spark.cli consume-files  --topic-dir /x/topic --out /x/sink --partition-by layer
     python -m ukis_kafka_spark.cli consume-upsert --topic-dir /x/topic --table /x/table --key fid
 
-The producer reads GeoJSON with the stdlib (the reference uses OGR;
-GeoJSON is the library-free common denominator), converts geometries
-to WKB with the pure-Python codec, and wraps each feature in the
-msgpack envelope. Consumers decode with mapInPandas and run the R7/R8
+Every producer reads its format into ``(geometry, props, srid)``
+features (GeoJSON with the stdlib — the reference uses OGR; GeoJSON is
+the library-free common denominator) and hands them to
+sources.kafka.publish_features, which encodes WKB with the
+pure-Python codec, wraps each feature in the msgpack envelope and
+appends to the topic. Consumers read the topic through
+sources.kafka.read_topic (one mapInPandas decode) and run the R7/R8
 sinks; each consumer scans and decodes its topic once, and every count
 it prints is observed on its one write.
 """
@@ -27,73 +31,68 @@ import sys
 
 import pandas as pd
 
-# the topic message shape; pre-offset (legacy) files read offset NULL
-_TOPIC_SCHEMA = "value binary, offset long"
+_GEOJSON_TYPE = {
+    "POINT": "Point",
+    "LINESTRING": "LineString",
+    "POLYGON": "Polygon",
+    "MULTIPOINT": "MultiPoint",
+    "MULTILINESTRING": "MultiLineString",
+    "MULTIPOLYGON": "MultiPolygon",
+}
 
 
-def _geojson_geom_to_wkb(geom: dict) -> bytes:
-    from .spatial.wkb import encode_wkb
+def _geojson_geometry(geom: dict):
+    """GeoJSON geometry dict → codec geometry (coordinate lists become
+    tuples, down to the coordinate pair)."""
+
+    def tuples(c):
+        return tuple(tuples(p) for p in c) if c and isinstance(c[0], list) else tuple(c)
 
     t = geom["type"].upper()
-    c = geom["coordinates"]
-    if t == "POINT":
-        return encode_wkb(("POINT", tuple(c)))
-    if t == "LINESTRING":
-        return encode_wkb(("LINESTRING", tuple(tuple(p) for p in c)))
-    if t == "POLYGON":
-        return encode_wkb(("POLYGON", tuple(tuple(tuple(p) for p in ring) for ring in c)))
-    if t == "MULTIPOINT":
-        return encode_wkb(("MULTIPOINT", tuple(tuple(p) for p in c)))
-    if t == "MULTILINESTRING":
-        return encode_wkb(("MULTILINESTRING", tuple(tuple(tuple(p) for p in ls) for ls in c)))
-    if t == "MULTIPOLYGON":
-        return encode_wkb(
-            ("MULTIPOLYGON", tuple(tuple(tuple(tuple(p) for p in ring) for ring in poly) for poly in c))
-        )
-    raise ValueError(f"unsupported GeoJSON geometry type: {t}")
+    if t not in _GEOJSON_TYPE:
+        raise ValueError(f"unsupported GeoJSON geometry type: {t}")
+    return (t, tuples(geom["coordinates"]))
 
 
-def cmd_produce(args: argparse.Namespace) -> int:
-    """R1+R2: vector file → feature envelopes → topic dir."""
+def _wkb_to_geojson_geom(buf: bytes) -> dict:
+    """Inverse of :func:`_geojson_geometry` — WKB bytes back to a
+    GeoJSON geometry dict (coordinate tuples become lists)."""
+    from .spatial.wkb import decode_wkb
+
+    def lists(c):
+        return [lists(p) for p in c] if c and isinstance(c[0], tuple) else list(c)
+
+    t, c = decode_wkb(buf)
+    return {"type": _GEOJSON_TYPE[t], "coordinates": lists(c)}
+
+
+def _produce(args: argparse.Namespace, features) -> int:
+    """Publish ``(geometry, props, srid)`` features to ``--topic-dir``."""
     from .plans import get_spark
-    from .sources.envelope import make_envelope
+    from .sources.kafka import publish_features
 
-    with open(args.geojson) as fh:
-        fc = json.load(fh)
-    feats = fc["features"] if fc.get("type") == "FeatureCollection" else [fc]
-    envelopes = []
-    for f in feats:
-        props = {k: v for k, v in (f.get("properties") or {}).items()}
-        envelopes.append(
-            make_envelope(_geojson_geom_to_wkb(f["geometry"]), props, layer=args.layer, srid=args.srid)
-        )
-    _publish_envelopes(envelopes, args.topic_dir)
+    n = publish_features(get_spark("cli-produce"), features, args.topic_dir, args.layer)
+    print(f"produced {n} features to {args.topic_dir}")
     return 0
 
 
-def _publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
-    """Append envelopes to the topic dir with monotonic per-message
-    offsets (Kafka-offset parity): continue from the existing topic
-    size so re-delivered keys keep produce order."""
-    import os
-
-    from .plans import get_spark
-
-    spark = get_spark("cli-produce")
-    base_off = 0
-    if os.path.isdir(topic_dir):
-        base_off = spark.read.schema(_TOPIC_SCHEMA).parquet(topic_dir).count()
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "value": pd.Series(envelopes, dtype=object),
-                "offset": range(base_off, base_off + len(envelopes)),
-            }
+def cmd_produce(args: argparse.Namespace) -> int:
+    """R1+R2: GeoJSON file → feature envelopes → topic dir. A feature
+    with a null geometry (RFC 7946 §3.2) is skipped."""
+    with open(args.geojson) as fh:
+        fc = json.load(fh)
+    feats = fc["features"] if fc.get("type") == "FeatureCollection" else [fc]
+    return _produce(
+        args,
+        (
+            (
+                _geojson_geometry(f["geometry"]) if f["geometry"] else None,
+                f.get("properties") or {},
+                args.srid,
+            )
+            for f in feats
         ),
-        schema=_TOPIC_SCHEMA,
     )
-    df.write.mode("append").parquet(topic_dir)
-    print(f"produced {len(envelopes)} features to {topic_dir}")
 
 
 def _coerce_prop(v):
@@ -127,41 +126,34 @@ def cmd_produce_wkt(args: argparse.Namespace) -> int:
     ingestion gap without OGR itself being importable offline."""
     import csv
 
-    from .sources.envelope import make_envelope
-    from .spatial.wkb import encode_wkb
     from .spatial.wkt import parse_wkt
 
-    envelopes = []
     with open(args.csv, newline="") as fh:
         reader = csv.DictReader(fh)
         if args.wkt_col not in (reader.fieldnames or []):
             print(f"error: no column {args.wkt_col!r} in {args.csv}", file=sys.stderr)
             return 2
-        for row in reader:
-            wkb = encode_wkb(parse_wkt(row[args.wkt_col]))
-            props = {k: _coerce_prop(v) for k, v in row.items() if k != args.wkt_col}
-            envelopes.append(make_envelope(wkb, props, layer=args.layer, srid=args.srid))
-    _publish_envelopes(envelopes, args.topic_dir)
-    return 0
+        return _produce(
+            args,
+            (
+                (
+                    parse_wkt(row[args.wkt_col]),
+                    {k: _coerce_prop(v) for k, v in row.items() if k != args.wkt_col},
+                    args.srid,
+                )
+                for row in reader
+            ),
+        )
 
 
 def cmd_produce_shp(args: argparse.Namespace) -> int:
     """R1+R2 (third ingestion format): ESRI Shapefile → envelope topic,
     via the pure-Python .shp/.dbf reader (sources.shapefile) — the
-    native OGR format closest to the reference's default ingest."""
-    from .sources.envelope import make_envelope
+    native OGR format closest to the reference's default ingest. Null
+    shapes keep .dbf alignment only and are not published."""
     from .sources.shapefile import read_shapefile
-    from .spatial.wkb import encode_wkb
 
-    envelopes = []
-    for geom, props in read_shapefile(args.shp):
-        if geom is None:  # Null shape: keeps .dbf alignment, nothing to publish
-            continue
-        envelopes.append(
-            make_envelope(encode_wkb(geom), props, layer=args.layer, srid=args.srid)
-        )
-    _publish_envelopes(envelopes, args.topic_dir)
-    return 0
+    return _produce(args, ((geom, props, args.srid) for geom, props in read_shapefile(args.shp)))
 
 
 def cmd_produce_gpkg(args: argparse.Namespace) -> int:
@@ -169,57 +161,15 @@ def cmd_produce_gpkg(args: argparse.Namespace) -> int:
     GPKG is SQLite, so the stdlib reads it (sources.gpkg); the geometry
     cells are header-wrapped standard WKB, re-encoded through the same
     codec every other producer uses. The per-layer SRS id from
-    gpkg_geometry_columns rides the envelope unless --srid overrides."""
-    from .sources.envelope import make_envelope
+    gpkg_geometry_columns rides the envelope unless --srid overrides.
+    NULL / empty geometries keep fid alignment only and are not
+    published."""
     from .sources.gpkg import read_gpkg
-    from .spatial.wkb import encode_wkb
 
-    envelopes = []
-    for geom, props, srs_id in read_gpkg(args.gpkg, layer=args.gpkg_layer):
-        if geom is None:  # NULL / empty geometry keeps fid alignment only
-            continue
-        envelopes.append(
-            make_envelope(
-                encode_wkb(geom),
-                props,
-                layer=args.layer,
-                srid=args.srid if args.srid is not None else srs_id,
-            )
-        )
-    _publish_envelopes(envelopes, args.topic_dir)
-    return 0
-
-
-def _decoded_features(spark, topic_dir: str):
-    from .sources.envelope import read_envelope
-    from .spatial.wkb import decode_wkb
-
-    # explicit schema: no footer-inference job, and a topic dir that
-    # mixes pre-offset files with offset-bearing ones (appends to an old
-    # topic) reads the same way whichever footer Spark would have picked
-    # — a legacy file lacks the column, so its rows read offset NULL,
-    # which loses to any real offset under the desc last-write-wins
-    # window (nulls sort last), exactly the right semantics
-    raw = spark.read.schema(_TOPIC_SCHEMA).parquet(topic_dir)
-
-    def decode(iter_pdf):
-        for pdf in iter_pdf:
-            out = {"layer": [], "srid": [], "geom_type": [], "wkb": [], "props_json": []}
-            for buf in pdf["value"]:
-                env = read_envelope(bytes(buf))
-                gtype, _ = decode_wkb(env["geom"])
-                out["layer"].append(env["meta"]["layer"])
-                out["srid"].append(env["meta"].get("srid", 4326))
-                out["geom_type"].append(gtype)
-                out["wkb"].append(env["geom"])
-                out["props_json"].append(json.dumps(env["props"], sort_keys=True))
-            out["offset"] = list(pdf["offset"])
-            yield pd.DataFrame(out)
-
-    return raw.mapInPandas(
-        decode,
-        "layer string, srid int, geom_type string, wkb binary, props_json string, offset long",
-    )
+    feats = read_gpkg(args.gpkg, layer=args.gpkg_layer)
+    if args.srid is not None:
+        feats = ((geom, props, args.srid) for geom, props, _ in feats)
+    return _produce(args, feats)
 
 
 def cmd_consume_files(args: argparse.Namespace) -> int:
@@ -228,10 +178,11 @@ def cmd_consume_files(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from .plans import get_spark
+    from .sources.kafka import read_topic
 
     spark = get_spark("cli-consume-files")
     obs = Observation()
-    feats = _decoded_features(spark, args.topic_dir)
+    feats = read_topic(spark, args.topic_dir)
     writer = feats.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
     if args.partition_by:
         writer = writer.partitionBy(*args.partition_by.split(","))
@@ -249,9 +200,10 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
 
     from .plans import get_spark
     from .sinks.files import upsert_parquet
+    from .sources.kafka import read_topic
 
     spark = get_spark("cli-consume-upsert")
-    feats = _decoded_features(spark, args.topic_dir).withColumn(
+    feats = read_topic(spark, args.topic_dir).withColumn(
         "fid", F.get_json_object("props_json", f"$.{args.key}")
     )
     if os.path.exists(args.table):
@@ -275,35 +227,6 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     return 0
 
 
-_GEOJSON_TYPE = {
-    "POINT": "Point",
-    "LINESTRING": "LineString",
-    "POLYGON": "Polygon",
-    "MULTIPOINT": "MultiPoint",
-    "MULTILINESTRING": "MultiLineString",
-    "MULTIPOLYGON": "MultiPolygon",
-}
-
-
-def _wkb_to_geojson_geom(buf: bytes) -> dict:
-    """Inverse of :func:`_geojson_geom_to_wkb` — WKB bytes back to a
-    GeoJSON geometry dict (coordinate tuples become lists)."""
-    from .spatial.wkb import decode_wkb
-
-    t, c = decode_wkb(buf)
-    if t == "POINT":
-        coords = list(c)
-    elif t in ("LINESTRING", "MULTIPOINT"):
-        coords = [list(p) for p in c]
-    elif t in ("POLYGON", "MULTILINESTRING"):
-        coords = [[list(p) for p in ring] for ring in c]
-    elif t == "MULTIPOLYGON":
-        coords = [[[list(p) for p in ring] for ring in poly] for poly in c]
-    else:  # decode_wkb only emits the six types above
-        raise ValueError(f"unsupported WKB geometry type: {t}")
-    return {"type": _GEOJSON_TYPE[t], "coordinates": coords}
-
-
 def cmd_consume_geojson(args: argparse.Namespace) -> int:
     """R8 export leg: topic → GeoJSON. Default output is RFC 8142
     GeoJSON Text Sequences (one Feature per line) written DISTRIBUTED
@@ -314,9 +237,10 @@ def cmd_consume_geojson(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from .plans import get_spark
+    from .sources.kafka import read_topic
 
     spark = get_spark("cli-consume-geojson")
-    feats = _decoded_features(spark, args.topic_dir)
+    feats = read_topic(spark, args.topic_dir)
     if args.layer:
         feats = feats.where(F.col("layer") == args.layer)
 

@@ -17,7 +17,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .cache import table_fingerprint
+from .cache import _SCRATCH, table_fingerprint
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -39,9 +39,8 @@ def _ship_package(spark: SparkSession) -> None:
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    scratch = os.path.join(os.path.dirname(pkg_dir), ".tmp")
-    os.makedirs(scratch, exist_ok=True)
-    zpath = os.path.join(scratch, "ukis_kafka_spark_pkg.zip")
+    os.makedirs(_SCRATCH, exist_ok=True)
+    zpath = os.path.join(_SCRATCH, "ukis_kafka_spark_pkg.zip")
     newest_src = max(
         os.path.getmtime(os.path.join(root, f))
         for root, _, files in os.walk(pkg_dir)
@@ -54,7 +53,7 @@ def _ship_package(spark: SparkSession) -> None:
         # addPyFile a half-written archive
         import tempfile
 
-        fd, tmp = tempfile.mkstemp(suffix=".zip", dir=scratch)
+        fd, tmp = tempfile.mkstemp(suffix=".zip", dir=_SCRATCH)
         os.close(fd)
         try:
             with zipfile.ZipFile(tmp, "w") as z:

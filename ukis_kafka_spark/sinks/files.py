@@ -21,10 +21,6 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources import load_table
 
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp"
-)
-
 
 def _scratch_dir() -> str:
     from ..cache import fast_scratch_root

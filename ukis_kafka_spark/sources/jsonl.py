@@ -859,13 +859,11 @@ def src_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    from ..cli import _decoded_features
+    from ..sources.kafka import publish_features, read_topic
     from ..spatial.wkb import decode_wkb
 
     def build(into: str) -> None:
-        from ..sources.envelope import make_envelope
         from ..sources.gpkg import read_gpkg, write_gpkg
-        from ..spatial.wkb import encode_wkb
 
         rows = (
             load_table(spark, sf_dir, "supplier")
@@ -885,19 +883,7 @@ def src_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             srid=31467,
         )
-        envelopes = [
-            make_envelope(encode_wkb(geom), props, layer="suppliers", srid=srid)
-            for geom, props, srid in read_gpkg(gpkg_path)
-        ]
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "value": pd.Series(envelopes, dtype=object),
-                    "offset": range(len(envelopes)),
-                }
-            ),
-            schema="value binary, offset long",
-        ).write.mode("overwrite").parquet(os.path.join(into, "topic"))
+        publish_features(spark, read_gpkg(gpkg_path), os.path.join(into, "topic"), "suppliers")
 
     src = os.path.join(
         _cache_publish(build, ("gpkg", 1, _table_fingerprint(sf_dir, "supplier"))),
@@ -908,7 +894,7 @@ def src_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     def wkb_lon(b):
         return pd.Series([decode_wkb(bytes(v))[1][0] for v in b])
 
-    feats = _decoded_features(spark, src)
+    feats = read_topic(spark, src)
     return (
         feats.select(
             F.get_json_object("props_json", "$.s_nationkey").cast("int").alias("nationkey"),

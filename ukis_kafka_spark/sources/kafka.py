@@ -1,9 +1,17 @@
-"""Kafka source/sink wiring (reference parity R2/R3 online path).
+"""The envelope topic format and its Kafka source/sink wiring
+(reference parity R2/R3).
+
+This module is the one owner of the topic format: ``TOPIC_SCHEMA``
+(a topic dir is parquet files of ``value binary, offset long``, the
+exact Kafka message shape plus its offset), ``publish_features`` (the
+one topic write every producer uses), ``read_topic`` (the one batch
+topic read) and ``decode_feature_stream`` (the one decode kernel, over
+a topic dir, a file stream or a Kafka stream alike).
 
 No broker (and no spark-sql-kafka connector jar) exists in the offline
-harness, so these builders are exercised there through their file-based
-twins. The selectable entry point is ``envelope_raw_stream``: set
-``UKIS_KAFKA_BROKERS`` (or pass ``brokers=``) and the SAME pipeline
+harness, so the Kafka builders are exercised there through their
+file-based twins. The selectable entry point is ``envelope_raw_stream``:
+set ``UKIS_KAFKA_BROKERS`` (or pass ``brokers=``) and the SAME pipeline
 reads ``format("kafka")``; leave it unset and it reads the wire-format
 parquet twin. Everything downstream of the raw ``value binary`` column
 — ``decode_feature_stream``, the aggregates, the sinks — is one shared
@@ -23,6 +31,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 ENV_BROKERS = "UKIS_KAFKA_BROKERS"
 ENV_TOPIC = "UKIS_KAFKA_TOPIC"
+
+# the topic message shape. An explicit schema plans no footer-inference
+# job, and a topic dir that mixes pre-offset files with offset-bearing
+# ones (appends to an old topic) reads the same way whichever footer
+# Spark would have picked — a legacy file lacks the column, so its rows
+# read offset NULL, which loses to any real offset under the desc
+# last-write-wins window (nulls sort last), exactly the right semantics
+TOPIC_SCHEMA = "value binary, offset long"
+
+_FEATURE_SCHEMA = "layer string, srid int, geom_type string, wkb binary, props_json string"
 
 
 def envelope_raw_stream(
@@ -66,41 +84,71 @@ def envelope_raw_stream(
     )
 
 
-def decode_feature_stream(raw: DataFrame, include_geom: bool = True) -> DataFrame:
+def decode_feature_stream(raw: DataFrame) -> DataFrame:
     """msgpack feature envelopes (``value binary``) → decoded feature
-    rows (layer, srid, geom_type, wkb, props_json). Shared by the Kafka
-    and file-twin sources — the decode is source-agnostic.
+    rows (layer, srid, geom_type, wkb, props_json), followed by every
+    other column of ``raw`` unchanged (a topic dir's ``offset``). Shared
+    by the topic dir, the Kafka and the file-twin sources — the decode
+    is source-agnostic."""
+    from pyspark.sql.types import StructType
 
-    ``include_geom=False`` prunes the wkb payload INSIDE the kernel for
-    consumers that only read properties (the geometry is still decoded
-    as an integrity check, it just never crosses the Arrow boundary).
-    At this corpus's ~21-byte point WKBs the saving is noise — the
-    per-row msgpack decode dominates — but payload-heavy geometries
-    (polygons, multipart) are exactly what a property-only consumer
-    should not ship."""
     from .envelope import read_envelope
     from ..spatial.wkb import decode_wkb
 
-    cols = ["layer", "srid", "geom_type"] + (["wkb"] if include_geom else []) + ["props_json"]
+    rest = [f for f in raw.schema.fields if f.name != "value"]
 
     def decode(iter_pdf):
         for pdf in iter_pdf:
-            out = {c: [] for c in cols}
+            out = {"layer": [], "srid": [], "geom_type": [], "wkb": [], "props_json": []}
             for buf in pdf["value"]:
                 env = read_envelope(bytes(buf))
                 gtype, _ = decode_wkb(env["geom"])
                 out["layer"].append(env["meta"]["layer"])
                 out["srid"].append(env["meta"].get("srid", 4326))
                 out["geom_type"].append(gtype)
-                if include_geom:
-                    out["wkb"].append(env["geom"])
+                out["wkb"].append(env["geom"])
                 out["props_json"].append(json.dumps(env["props"], sort_keys=True))
+            for f in rest:
+                out[f.name] = list(pdf[f.name])
             yield pd.DataFrame(out)
 
-    schema = ", ".join(
-        f"{c} {'binary' if c == 'wkb' else 'int' if c == 'srid' else 'string'}" for c in cols
-    )
-    return raw.mapInPandas(decode, schema)
+    schema = StructType.fromDDL(_FEATURE_SCHEMA).fields + rest
+    return raw.mapInPandas(decode, StructType(schema))
+
+
+def read_topic(spark: SparkSession, topic_dir: str) -> DataFrame:
+    """A topic dir → decoded feature rows plus their ``offset``."""
+    return decode_feature_stream(spark.read.schema(TOPIC_SCHEMA).parquet(topic_dir))
+
+
+def publish_features(spark: SparkSession, features, topic_dir: str, layer: str) -> int:
+    """Append ``(geometry, props, srid)`` features to a topic dir as
+    envelopes and return how many were published. ``None`` geometries
+    are skipped. Every envelope is built before the dir is touched, so
+    a bad feature fails with nothing written. Offsets continue from the
+    existing topic size (Kafka-offset parity), so re-delivered keys
+    keep produce order."""
+    from .envelope import make_envelope
+    from ..spatial.wkb import encode_wkb
+
+    envelopes = [
+        make_envelope(encode_wkb(geom), props, layer=layer, srid=srid)
+        for geom, props, srid in features
+        if geom is not None
+    ]
+    base_off = 0
+    if os.path.isdir(topic_dir):
+        base_off = spark.read.schema(TOPIC_SCHEMA).parquet(topic_dir).count()
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "value": pd.Series(envelopes, dtype=object),
+                "offset": range(base_off, base_off + len(envelopes)),
+            }
+        ),
+        schema=TOPIC_SCHEMA,
+    ).write.mode("append").parquet(topic_dir)
+    return len(envelopes)
 
 
 def kafka_feature_stream(

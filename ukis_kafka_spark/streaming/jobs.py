@@ -32,8 +32,6 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources import load_table
 
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
-
 _EVENT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 )
@@ -417,7 +415,7 @@ def src_kafka_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cache_publish(build_wire, ("wire", 2, _table_fingerprint(sf_dir))), "wire"
         )
         stream = envelope_raw_stream(spark, wire_dir=src)
-        feats = decode_feature_stream(stream, include_geom=False)
+        feats = decode_feature_stream(stream)
         # event fields ride in props_json; extraction is JVM-side
         # (from_json round-trips json.dumps exactly for long/str/double)
         decoded = feats.select(

@@ -8,17 +8,19 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 
 import pyspark.sql.functions as F
 
+from ukis_kafka_spark import cache
 from ukis_kafka_spark.sources import load_table
-from ukis_kafka_spark.streaming.jobs import _scratch_dir, replay_events_as_stream
+from ukis_kafka_spark.streaming.jobs import replay_events_as_stream
 
 from .conftest import SF_SMOKE
 
 
 def test_checkpoint_recovery_exactly_once(spark):
-    work = _scratch_dir()
+    work = tempfile.mkdtemp(prefix="stream_", dir=cache.fast_scratch_root())
     try:
         # stage all 8 chunks, then withhold the last 4
         replay_events_as_stream(spark, SF_SMOKE, work)
@@ -113,7 +115,7 @@ def test_stateful_cdc_recovers_groupstate(spark):
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    work = _scratch_dir()
+    work = tempfile.mkdtemp(prefix="stream_", dir=cache.fast_scratch_root())
     try:
         replay_events_as_stream(spark, SF_SMOKE, work)
         src = os.path.join(work, "src")
@@ -251,7 +253,7 @@ def test_stateful_subseq_recovers_array_state(spark):
 
     from ukis_kafka_spark.streaming.jobs import _EVENT_SCHEMA
 
-    work = _scratch_dir()
+    work = tempfile.mkdtemp(prefix="stream_", dir=cache.fast_scratch_root())
     try:
         replay_events_as_stream(spark, SF_SMOKE, work)
         src = os.path.join(work, "src")

@@ -9,6 +9,7 @@ import math
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from ukis_kafka_spark import api
 from ukis_kafka_spark.sources import load_table
@@ -95,6 +96,78 @@ def test_fullouter_join_chunk_count_invariant(spark, monkeypatch):
     assert at2 == at4
     assert any(c is None for c, _, _ in at2)  # unmatched purchases fired
     assert any(p is None for _, p, _ in at2)  # unmatched clicks fired
+
+
+def _mem_views(spark) -> set:
+    return {
+        t.name
+        for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("mem_")
+    }
+
+
+def _scratch_dirs(prefix: str) -> set:
+    from ukis_kafka_spark.cache import fast_scratch_root
+
+    return {d for d in os.listdir(fast_scratch_root()) if d.startswith(prefix)}
+
+
+def test_scratch_queries_leave_no_session_state(spark):
+    """Memory-sink operators must not grow the session: each call pins
+    its result, then drops its ``mem_*`` view and its work dir — the
+    three memory-sink shapes (complete-mode aggregate, state-store
+    read of the sink's checkpoint, synthetic rate source) leave no
+    temp view and no scratch dir behind, and their results stay
+    readable."""
+    names = ("s_stateful_count", "src_statestore", "s_rate_source")
+    views = _mem_views(spark)
+    dirs = {n: _scratch_dirs(n + "_") for n in names}
+    for name in names:
+        assert api.queries()[name](spark, SF_SMOKE).count() > 0
+    assert _mem_views(spark) == views
+    for name in names:
+        assert _scratch_dirs(name + "_") == dirs[name]
+
+
+def test_scratch_query_cleans_up_when_the_operator_fails(spark, monkeypatch):
+    """A failure after the memory run re-raises and still drops the
+    operator's view and work dir; a second memory run in one work dir
+    fails loudly instead of resuming the first run's checkpoint."""
+    import shutil
+    import tempfile
+
+    from ukis_kafka_spark.cache import fast_scratch_root
+    from ukis_kafka_spark.registry import memory_view
+    from ukis_kafka_spark.streaming import jobs
+
+    real = jobs.run_to_memory
+    works = []
+
+    def run_then_fail(stream_df, work, mode="append"):
+        works.append(work)
+        real(stream_df, work, mode)
+        raise RuntimeError("sink failed after the run")
+
+    monkeypatch.setattr(jobs, "run_to_memory", run_then_fail)
+    with pytest.raises(RuntimeError, match="sink failed after the run"):
+        api.queries()["s_stateful_count"](spark, SF_SMOKE)
+    assert len(works) == 1 and not os.path.exists(works[0])
+    assert not {v for v in _mem_views(spark) if v.startswith("mem_s_stateful_count_")}
+
+    work = tempfile.mkdtemp(prefix="stream_", dir=fast_scratch_root())
+    try:
+        rate = (
+            spark.readStream.format("rate-micro-batch")
+            .option("rowsPerBatch", 10)
+            .option("startTimestamp", 0)
+            .load()
+        )
+        assert real(rate, work).count() == 10
+        with pytest.raises(FileExistsError):
+            real(rate, work)
+    finally:
+        spark.catalog.dropTempView(memory_view(work))
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def test_upsert_parquet_semantics(spark, tmp_path):

@@ -54,10 +54,12 @@ def entry(spark: SparkSession) -> DataFrame:
 _REFLOAT_MIN_ROUND = {
     "q_join_theta_range": 13,
     "s_foreach_upsert": 13,
+    "s_rate_source": 13,
     "s_warm_start_upsert": 13,
     "sink_upsert": 13,
     "src_gpkg_roundtrip": 13,
     "src_kafka_shape": 13,
+    "src_statestore": 13,
 }
 
 

@@ -7,17 +7,27 @@ Every operator registers itself with :func:`query`; the driver-facing
 ``(spark, sf_dir)`` and returns a DataFrame; its oracle is the
 equivalent DuckDB SQL (omitted for non-SQL-expressible operators,
 which the driver then checks rows-only).
+
+Operators that write before they read (streams, sinks, connector
+round-trips) register with :func:`scratch_query` instead: it owns the
+whole scratch lifecycle — a private ``work`` dir under
+``cache.fast_scratch_root()``, the pin that lets the result outlive it,
+and the cleanup of both the dir and the operator's memory-sink view
+(:func:`memory_view`) — so the operator body only writes and reads.
 """
 
 from __future__ import annotations
 
 import functools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .cache import _SCRATCH, table_fingerprint
+from .cache import _SCRATCH, fast_scratch_root, table_fingerprint
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -35,7 +45,6 @@ def _ship_package(spark: SparkSession) -> None:
     it on every worker's path regardless of launch directory."""
     if getattr(spark, "_ukis_pkg_shipped", False):
         return
-    import os
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -51,8 +60,6 @@ def _ship_package(spark: SparkSession) -> None:
         # build in a process-unique temp file and os.replace() it in:
         # concurrent drivers (pytest + tools/check.py) must never
         # addPyFile a half-written archive
-        import tempfile
-
         fd, tmp = tempfile.mkstemp(suffix=".zip", dir=_SCRATCH)
         os.close(fd)
         try:
@@ -109,8 +116,6 @@ def checkpoint_df(df: DataFrame, *, eager: bool = True) -> DataFrame:
     point is to stop the next iteration's planner from re-executing
     the carried lineage at staging time.
     """
-    import os
-
     spark = df.sparkSession
     ckdir = os.environ.get("UKIS_CHECKPOINT_DIR") or spark.conf.get(
         "spark.ukis.checkpointDir", None
@@ -164,5 +169,37 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
         if oracle is not None:
             ORACLE[name] = oracle
         return fn
+
+    return deco
+
+
+def memory_view(work: str) -> str:
+    """The temp view a scratch query's memory sink registers: one name
+    per ``work`` dir, so :func:`scratch_query` drops it by name."""
+    return "mem_" + os.path.basename(work)
+
+
+def scratch_query(name: str, oracle: Optional[str] = None) -> Callable[[Callable], QueryFn]:
+    """Register ``fn(spark, sf_dir, work) -> DataFrame`` under ``name``.
+
+    Each call runs ``fn`` in a fresh ``work`` dir, pins its result with
+    ``localCheckpoint()`` so it outlives the dir, then drops the
+    memory-sink view :func:`memory_view` names (dropping a known name
+    is cheap; listing the catalog is not) and removes the dir — on
+    success and on failure alike, so session state does not grow with
+    the number of queries run. Returns the ``(spark, sf_dir)``
+    callable."""
+
+    def deco(fn: Callable) -> QueryFn:
+        @functools.wraps(fn)
+        def scratch(spark: SparkSession, sf_dir: str) -> DataFrame:
+            work = tempfile.mkdtemp(prefix=f"{name}_", dir=fast_scratch_root())
+            try:
+                return fn(spark, sf_dir, work).localCheckpoint()
+            finally:
+                spark.catalog.dropTempView(memory_view(work))
+                shutil.rmtree(work, ignore_errors=True)
+
+        return query(name, oracle)(scratch)
 
     return deco

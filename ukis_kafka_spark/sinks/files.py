@@ -4,28 +4,22 @@ sink).
 
 ``upsert_parquet`` is the offline stand-in for MERGE INTO (Delta/JDBC
 in production): last-writer-wins by key, crash-safe directory swap. The
-queries run the real sinks against repo-local scratch space and
-oracle-check what a reader sees afterwards — sink correctness is
-judged by read-back, not by write success.
+queries are ``registry.scratch_query`` operators: each runs the real
+sink into its private ``work`` dir and oracle-checks what a reader
+sees afterwards — sink correctness is judged by read-back, not by
+write success.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import scratch_query
 from ..sources import load_table
-
-
-def _scratch_dir() -> str:
-    from ..cache import fast_scratch_root
-
-    return tempfile.mkdtemp(prefix="sink_", dir=fast_scratch_root())
 
 
 def upsert_parquet(
@@ -85,7 +79,7 @@ def _merge_by_key(
     return tagged.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop(*drop)
 
 
-@query(
+@scratch_query(
     "sink_parquet_part",
     oracle="""
 SELECT l_returnflag, l_linestatus, count(*) AS n
@@ -94,32 +88,27 @@ WHERE l_quantity >= 30
 GROUP BY l_returnflag, l_linestatus
 """,
 )
-def sink_parquet_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_parquet_part(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Partitioned parquet sink (R8): write filtered lineitem
     partitioned by (returnflag, linestatus), then prove partition
     integrity by aggregating the *read-back* — which also exercises
     partition-directory discovery and pruning on the read side."""
-    work = _scratch_dir()
-    try:
-        out = os.path.join(work, "part_sink")
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .where(F.col("l_quantity") >= 30)
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag", "l_linestatus")
-            .parquet(out)
-        )
-        back = spark.read.parquet(out)
-        return (
-            back.groupBy("l_returnflag", "l_linestatus")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    out = os.path.join(work, "part_sink")
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .where(F.col("l_quantity") >= 30)
+        .write.mode("overwrite")
+        .partitionBy("l_returnflag", "l_linestatus")
+        .parquet(out)
+    )
+    back = spark.read.parquet(out)
+    return (
+        back.groupBy("l_returnflag", "l_linestatus")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
-@query(
+@scratch_query(
     "sink_upsert",
     oracle="""
 SELECT c_custkey, c_acctbal, c_mktsegment FROM (
@@ -134,40 +123,36 @@ SELECT c_custkey, c_acctbal, c_mktsegment FROM (
 )
 """,
 )
-def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_upsert(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Keyed upsert sink (R7): update every BUILDING customer, insert
     10 new keys, read the merged table back. The oracle states the
     expected post-merge table directly."""
-    work = _scratch_dir()
-    try:
-        target = os.path.join(work, "upsert_target")
-        c = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_acctbal", "c_mktsegment"
-        )
-        updates_existing = c.where(F.col("c_mktsegment") == "BUILDING").select(
-            "c_custkey",
-            (F.col("c_acctbal") + 100.0).alias("c_acctbal"),
-            F.lit("UPGRADED").alias("c_mktsegment"),
-        )
-        updates_new = spark.range(1, 11).select(
-            (F.col("id") + 9000000).alias("c_custkey"),
-            F.col("id").cast("double").alias("c_acctbal"),
-            F.lit("NEW").alias("c_mktsegment"),
-        )
-        c.write.mode("overwrite").parquet(target)
-        upsert_parquet(
-            spark,
-            spark.read.parquet(target),
-            updates_existing.unionByName(updates_new),
-            ["c_custkey"],
-            target,
-        )
-        return spark.read.parquet(target).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    target = os.path.join(work, "upsert_target")
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_acctbal", "c_mktsegment"
+    )
+    updates_existing = c.where(F.col("c_mktsegment") == "BUILDING").select(
+        "c_custkey",
+        (F.col("c_acctbal") + 100.0).alias("c_acctbal"),
+        F.lit("UPGRADED").alias("c_mktsegment"),
+    )
+    updates_new = spark.range(1, 11).select(
+        (F.col("id") + 9000000).alias("c_custkey"),
+        F.col("id").cast("double").alias("c_acctbal"),
+        F.lit("NEW").alias("c_mktsegment"),
+    )
+    c.write.mode("overwrite").parquet(target)
+    upsert_parquet(
+        spark,
+        spark.read.parquet(target),
+        updates_existing.unionByName(updates_new),
+        ["c_custkey"],
+        target,
+    )
+    return spark.read.parquet(target)
 
 
-@query(
+@scratch_query(
     "sink_dynamic_overwrite",
     oracle="""
 SELECT lang, count(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars
@@ -179,7 +164,7 @@ FROM (
 GROUP BY lang
 """,
 )
-def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Dynamic partition overwrite (the lake-side incremental-reload
     primitive): write documents partitioned by lang, then rewrite ONLY
     the lang=en partition with a filtered slice under
@@ -188,7 +173,6 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back aggregate proves exactly that; this is how a daily
     pipeline replaces one day/language/source partition of a 100 TB
     table without rewriting the rest."""
-    work = _scratch_dir()
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         out = os.path.join(work, "dyn_sink")
@@ -205,14 +189,12 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             back.groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("chars"))
-            .localCheckpoint()
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        shutil.rmtree(work, ignore_errors=True)
 
 
-@query(
+@scratch_query(
     "sink_manifest",
     oracle="""
 SELECT l_returnflag AS part_key,
@@ -224,7 +206,7 @@ FROM lineitem
 GROUP BY l_returnflag
 """,
 )
-def sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_manifest(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Partitioned write + statistics manifest: alongside the
     partitioned parquet sink, emit the per-partition manifest (row
     count, key min/max, checksummable measure total) that lakehouse
@@ -234,31 +216,26 @@ def sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-side statement of the same numbers. The manifest aggregate
     reuses the partition column, so it prunes per partition on the
     read side."""
-    work = _scratch_dir()
-    try:
-        out = os.path.join(work, "manifest_sink")
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_returnflag", "l_orderkey", "l_extendedprice")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag")
-            .parquet(out)
+    out = os.path.join(work, "manifest_sink")
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_returnflag", "l_orderkey", "l_extendedprice")
+        .write.mode("overwrite")
+        .partitionBy("l_returnflag")
+        .parquet(out)
+    )
+    back = spark.read.parquet(out)
+    return (
+        back.groupBy(F.col("l_returnflag").alias("part_key"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("l_orderkey").alias("min_key"),
+            F.max("l_orderkey").alias("max_key"),
+            F.sum(F.col("l_extendedprice").cast("decimal(28,10)"))
+            .cast("double")
+            .alias("price_sum"),
         )
-        back = spark.read.parquet(out)
-        return (
-            back.groupBy(F.col("l_returnflag").alias("part_key"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("l_orderkey").alias("min_key"),
-                F.max("l_orderkey").alias("max_key"),
-                F.sum(F.col("l_extendedprice").cast("decimal(28,10)"))
-                .cast("double")
-                .alias("price_sum"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
 def compact_partitioned(spark: SparkSession, src_dir: str, out_dir: str) -> tuple[int, int]:
@@ -289,7 +266,7 @@ def compact_partitioned(spark: SparkSession, src_dir: str, out_dir: str) -> tupl
     return before, _count(out_dir)
 
 
-@query(
+@scratch_query(
     "sink_compact",
     oracle="""
 SELECT event_type,
@@ -301,7 +278,7 @@ FROM events
 GROUP BY event_type
 """,
 )
-def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_compact(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Small-file compaction: the events table is first written as a
     deliberately fragmented partitioned sink (16 shuffle slices per
     event_type directory — the shape a streaming writer leaves
@@ -311,37 +288,32 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's statement over the original parquet.  The unit test pins
     the file-count mechanics (before = 16 per partition, after = 1);
     the oracle pins the data integrity."""
-    work = _scratch_dir()
-    try:
-        frag = os.path.join(work, "fragmented")
-        compacted = os.path.join(work, "compacted")
-        (
-            load_table(spark, sf_dir, "events")
-            .select("event_id", "user_id", "event_type", "value")
-            .repartition(16)
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(frag)
+    frag = os.path.join(work, "fragmented")
+    compacted = os.path.join(work, "compacted")
+    (
+        load_table(spark, sf_dir, "events")
+        .select("event_id", "user_id", "event_type", "value")
+        .repartition(16)
+        .write.mode("overwrite")
+        .partitionBy("event_type")
+        .parquet(frag)
+    )
+    compact_partitioned(spark, frag, compacted)
+    back = spark.read.parquet(compacted)
+    return (
+        back.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("event_id").alias("min_id"),
+            F.max("event_id").alias("max_id"),
+            F.sum(F.col("value").cast("decimal(28,10)"))
+            .cast("double")
+            .alias("value_sum"),
         )
-        compact_partitioned(spark, frag, compacted)
-        back = spark.read.parquet(compacted)
-        return (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("event_id").alias("min_id"),
-                F.max("event_id").alias("max_id"),
-                F.sum(F.col("value").cast("decimal(28,10)"))
-                .cast("double")
-                .alias("value_sum"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
-@query(
+@scratch_query(
     "sink_maxrecords",
     oracle="""
 WITH n AS (SELECT count(*) AS total FROM events)
@@ -353,7 +325,7 @@ SELECT CAST((total + 4095) // 4096 AS BIGINT) AS n_files,
 FROM n
 """,
 )
-def sink_maxrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_maxrecords(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """File-size governance on write: ``maxRecordsPerFile`` rolls a
     writer task to a new file every 4096 rows, the knob that bounds
     file sizes when a partition is large (the complement of
@@ -365,32 +337,28 @@ def sink_maxrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-task write keeps the roll sequence deterministic; at scale
     the same option applies per task, bounding every file
     independently of partition skew."""
-    work = _scratch_dir()
-    try:
-        target = os.path.join(work, "capped")
-        (
-            load_table(spark, sf_dir, "events")
-            .select("event_id", "user_id", "value")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", 4096)
-            .parquet(target)
-        )
-        back = spark.read.parquet(target)
-        per_file = back.groupBy(F.col("_metadata.file_name").alias("f")).agg(
-            F.count(F.lit(1)).alias("rows_in_file")
-        )
-        return per_file.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_files"),
-            F.sum("rows_in_file").cast("bigint").alias("n_rows"),
-            F.min("rows_in_file").cast("bigint").alias("tail_rows"),
-            F.max("rows_in_file").cast("bigint").alias("cap"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    target = os.path.join(work, "capped")
+    (
+        load_table(spark, sf_dir, "events")
+        .select("event_id", "user_id", "value")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 4096)
+        .parquet(target)
+    )
+    back = spark.read.parquet(target)
+    per_file = back.groupBy(F.col("_metadata.file_name").alias("f")).agg(
+        F.count(F.lit(1)).alias("rows_in_file")
+    )
+    return per_file.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_files"),
+        F.sum("rows_in_file").cast("bigint").alias("n_rows"),
+        F.min("rows_in_file").cast("bigint").alias("tail_rows"),
+        F.max("rows_in_file").cast("bigint").alias("cap"),
+    )
 
 
-@query(
+@scratch_query(
     "sink_merge_on_read",
     oracle="""
 SELECT event_type,
@@ -402,7 +370,7 @@ WHERE event_id % 13 <> 0
 GROUP BY event_type
 """,
 )
-def sink_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_merge_on_read(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Merge-on-read deletes (the Iceberg/Delta deletion-vector
     pattern): the base data is written ONCE and never rewritten;
     deletes land as a separate tombstone file of keys, and every
@@ -415,35 +383,30 @@ def sink_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast side; compaction (folding tombstones into the base,
     sink_compact's job) restores scan speed when the delete ratio
     grows."""
-    work = _scratch_dir()
-    try:
-        base_dir = os.path.join(work, "base")
-        del_dir = os.path.join(work, "deletes")
-        e = load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
+    base_dir = os.path.join(work, "base")
+    del_dir = os.path.join(work, "deletes")
+    e = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
+    e.write.mode("overwrite").parquet(base_dir)
+    # a later "delete where event_id % 13 = 0" lands as tombstones
+    e.where(F.col("event_id") % 13 == 0).select("event_id").write.mode(
+        "overwrite"
+    ).parquet(del_dir)
+    base = spark.read.parquet(base_dir)
+    tombs = spark.read.parquet(del_dir)
+    live = base.join(F.broadcast(tombs), "event_id", "left_anti")
+    return (
+        live.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("event_id").alias("min_id"),
+            F.max("event_id").alias("max_id"),
         )
-        e.write.mode("overwrite").parquet(base_dir)
-        # a later "delete where event_id % 13 = 0" lands as tombstones
-        e.where(F.col("event_id") % 13 == 0).select("event_id").write.mode(
-            "overwrite"
-        ).parquet(del_dir)
-        base = spark.read.parquet(base_dir)
-        tombs = spark.read.parquet(del_dir)
-        live = base.join(F.broadcast(tombs), "event_id", "left_anti")
-        return (
-            live.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("event_id").alias("min_id"),
-                F.max("event_id").alias("max_id"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    )
 
 
-@query(
+@scratch_query(
     "sink_timetravel",
     oracle="""
 SELECT 1 AS version, count(*) AS n_rows,
@@ -459,7 +422,7 @@ SELECT 2 AS version, count(*) AS n_rows,
 FROM orders
 """,
 )
-def sink_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_timetravel(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Snapshot time travel over an append-only table, the way Delta /
     Iceberg implement it — each commit's MANIFEST pins the exact file
     list, and reading "AS OF v1" means planning only v1's files, not
@@ -473,48 +436,44 @@ def sink_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     table).  Scale: manifests make snapshot reads O(files-in-snapshot)
     and immune to concurrent appends; the aggregates are one partial-
     agg scan per version."""
-    work = _scratch_dir()
-    try:
-        data = os.path.join(work, "tt", "data")
-        src = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice", "o_orderdate"
+    data = os.path.join(work, "tt", "data")
+    src = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderdate"
+    )
+    cut = F.lit("1998-01-01 00:00:00").cast("timestamp")
+
+    def _files() -> list[str]:
+        return sorted(
+            os.path.join(r, f)
+            for r, _, fs in os.walk(data)
+            for f in fs
+            if f.endswith(".parquet")
         )
-        cut = F.lit("1998-01-01 00:00:00").cast("timestamp")
 
-        def _files() -> list[str]:
-            return sorted(
-                os.path.join(r, f)
-                for r, _, fs in os.walk(data)
-                for f in fs
-                if f.endswith(".parquet")
+    src.where(F.col("o_orderdate") < cut).write.mode("overwrite").parquet(data)
+    manifest_v1 = _files()  # commit 1: pinned file list
+    src.where(~(F.col("o_orderdate") < cut)).write.mode("append").parquet(data)
+    manifest_v2 = _files()  # commit 2: superset of v1's files
+    assert set(manifest_v1) < set(manifest_v2)
+
+    def snap(files: list[str], version: int) -> DataFrame:
+        return (
+            spark.read.parquet(*files)
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.min("o_orderkey").alias("min_key"),
+                F.max("o_orderkey").alias("max_key"),
+                F.sum(F.col("o_totalprice").cast("decimal(28,10)"))
+                .cast("double")
+                .alias("price_sum"),
             )
+            .select(F.lit(version).alias("version"), "*")
+        )
 
-        src.where(F.col("o_orderdate") < cut).write.mode("overwrite").parquet(data)
-        manifest_v1 = _files()  # commit 1: pinned file list
-        src.where(~(F.col("o_orderdate") < cut)).write.mode("append").parquet(data)
-        manifest_v2 = _files()  # commit 2: superset of v1's files
-        assert set(manifest_v1) < set(manifest_v2)
-
-        def snap(files: list[str], version: int) -> DataFrame:
-            return (
-                spark.read.parquet(*files)
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.min("o_orderkey").alias("min_key"),
-                    F.max("o_orderkey").alias("max_key"),
-                    F.sum(F.col("o_totalprice").cast("decimal(28,10)"))
-                    .cast("double")
-                    .alias("price_sum"),
-                )
-                .select(F.lit(version).alias("version"), "*")
-            )
-
-        return snap(manifest_v1, 1).unionByName(snap(manifest_v2, 2)).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return snap(manifest_v1, 1).unionByName(snap(manifest_v2, 2))
 
 
-@query(
+@scratch_query(
     "sink_vacuum",
     oracle="""
 SELECT count(*) AS n_rows,
@@ -527,7 +486,7 @@ SELECT count(*) AS n_rows,
 FROM orders
 """,
 )
-def sink_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_vacuum(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """VACUUM / retention — the garbage-collection half of the
     [sink_timetravel] commit protocol: commit v1 writes the table as 4
     files; commit v2 COMPACTS it into 2 new files whose manifest pins
@@ -542,52 +501,47 @@ def sink_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate exactly, so the sweep touched ONLY garbage.  Scale:
     vacuum is a metadata diff (directory listing minus manifest set)
     plus deletes — O(files), no data read."""
-    work = _scratch_dir()
-    try:
-        data = os.path.join(work, "vac", "data")
-        src = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    data = os.path.join(work, "vac", "data")
+    src = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
 
-        def _files() -> set[str]:
-            return {
-                os.path.join(r, f)
-                for r, _, fs in os.walk(data)
-                for f in fs
-                if f.endswith(".parquet")
-            }
+    def _files() -> set[str]:
+        return {
+            os.path.join(r, f)
+            for r, _, fs in os.walk(data)
+            for f in fs
+            if f.endswith(".parquet")
+        }
 
-        src.repartition(4).write.mode("overwrite").parquet(data)
-        v1_files = _files()
-        # commit v2: compaction rewrite — new files; the manifest drops v1's
-        spark.read.parquet(*sorted(v1_files)).repartition(2).write.mode(
-            "append"
-        ).parquet(data)
-        manifest_v2 = _files() - v1_files
-        assert len(v1_files) == 4 and len(manifest_v2) == 2
+    src.repartition(4).write.mode("overwrite").parquet(data)
+    v1_files = _files()
+    # commit v2: compaction rewrite — new files; the manifest drops v1's
+    spark.read.parquet(*sorted(v1_files)).repartition(2).write.mode(
+        "append"
+    ).parquet(data)
+    manifest_v2 = _files() - v1_files
+    assert len(v1_files) == 4 and len(manifest_v2) == 2
 
-        before = _files()
-        garbage = before - manifest_v2
-        for f in garbage:  # the vacuum sweep: unreferenced files only
-            os.remove(f)
-        remaining = _files()
-        assert garbage == v1_files and remaining == manifest_v2
+    before = _files()
+    garbage = before - manifest_v2
+    for f in garbage:  # the vacuum sweep: unreferenced files only
+        os.remove(f)
+    remaining = _files()
+    assert garbage == v1_files and remaining == manifest_v2
 
-        return (
-            spark.read.parquet(*sorted(remaining))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("o_orderkey").alias("min_key"),
-                F.max("o_orderkey").alias("max_key"),
-                F.sum(F.col("o_totalprice").cast("decimal(28,10)"))
-                .cast("double")
-                .alias("price_sum"),
-            )
-            .select(
-                "*",
-                F.lit(len(before)).cast("long").alias("files_before"),
-                F.lit(len(garbage)).cast("long").alias("files_removed"),
-                F.lit(len(remaining)).cast("long").alias("files_after"),
-            )
-            .localCheckpoint()
+    return (
+        spark.read.parquet(*sorted(remaining))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("o_orderkey").alias("min_key"),
+            F.max("o_orderkey").alias("max_key"),
+            F.sum(F.col("o_totalprice").cast("decimal(28,10)"))
+            .cast("double")
+            .alias("price_sum"),
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .select(
+            "*",
+            F.lit(len(before)).cast("long").alias("files_before"),
+            F.lit(len(garbage)).cast("long").alias("files_removed"),
+            F.lit(len(remaining)).cast("long").alias("files_after"),
+        )
+    )

@@ -30,9 +30,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..cache import cache_publish as _cache_publish
-from ..cache import table_fingerprint as _table_fingerprint
-from ..registry import query
+from ..cache import cache_publish, table_fingerprint
+from ..registry import query, scratch_query
 from ..sources import load_table
 from .avro import read_blocks, scan_blocks, spark_ddl
 
@@ -237,7 +236,7 @@ def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("avro", 1, _table_fingerprint(sf_dir, "orders"))),
+        cache_publish(build, ("avro", 1, table_fingerprint(sf_dir, "orders"))),
         "orders.avro",
     )
     _ensure_registered(spark)
@@ -394,7 +393,7 @@ def _ensure_sink_registered(spark: SparkSession) -> None:
     spark._avrosink_registered = True
 
 
-@query(
+@scratch_query(
     "sink_avro_roundtrip",
     oracle="""
 SELECT event_type,
@@ -408,7 +407,7 @@ WHERE event_id % 5 = 0
 GROUP BY event_type
 """,
 )
-def sink_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_avro_roundtrip(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Distributed Avro WRITE parity: a filtered events projection is
     written task-parallel through the avrosink DataSource (one deflate
     container per task, two-phase commit), read back through avroscan
@@ -420,33 +419,21 @@ def sink_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what a 100 TB Avro dataset looks like.  Nullable columns
     ride the union encoding (events fields are nullable in-schema).
     Sum discipline per CLAUDE.md: DECIMAL mass, VARCHAR-routed cast."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     _ensure_registered(spark)
     _ensure_sink_registered(spark)
-    from ..cache import fast_scratch_root
-    out = _tempfile.mkdtemp(prefix="avro_sink_", dir=fast_scratch_root())
-    try:
-        (
-            load_table(spark, sf_dir, "events")
-            .where(F.col("event_id") % 5 == 0)
-            .select("event_id", "event_type", "value")
-            .write.format("avrosink")
-            .option("path", out)
-            .mode("append")
-            .save()
-        )
-        back = spark.read.format("avroscan").option("path", out).load()
-        return (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(28,10)")).cast("double").alias("value_sum"),
-                F.min("event_id").alias("min_id"),
-                F.max("event_id").alias("max_id"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        _shutil.rmtree(out, ignore_errors=True)
+    (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("event_id") % 5 == 0)
+        .select("event_id", "event_type", "value")
+        .write.format("avrosink")
+        .option("path", work)
+        .mode("append")
+        .save()
+    )
+    back = spark.read.format("avroscan").option("path", work).load()
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(28,10)")).cast("double").alias("value_sum"),
+        F.min("event_id").alias("min_id"),
+        F.max("event_id").alias("max_id"),
+    )

@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
-from ..cache import cache_publish as _cache_publish
-from ..cache import table_fingerprint as _table_fingerprint
+from ..cache import cache_publish, table_fingerprint
 
 _JSON_SCHEMA = "event_id long, user_id long, event_type string, value double"
 
@@ -54,7 +53,7 @@ def src_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("jsonl", 2, _table_fingerprint(sf_dir))), "jsonl"
+        cache_publish(build, ("jsonl", 2, table_fingerprint(sf_dir))), "jsonl"
     )
     back = spark.read.schema(_JSON_SCHEMA).json(src)
     return back.groupBy("event_type").agg(
@@ -94,7 +93,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("csv", 2, _table_fingerprint(sf_dir))), "csv"
+        cache_publish(build, ("csv", 2, table_fingerprint(sf_dir))), "csv"
     )
     back = spark.read.schema(
         "event_id long, user_id long, event_type string, value double, props string"
@@ -135,7 +134,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("orc", 2, _table_fingerprint(sf_dir, "documents"))), "orc"
+        cache_publish(build, ("orc", 2, table_fingerprint(sf_dir, "documents"))), "orc"
     )
     back = spark.read.orc(src)
     return back.groupBy("lang", "source").agg(
@@ -180,7 +179,7 @@ def src_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(r["text"].encode("ascii"))
 
     src = os.path.join(
-        _cache_publish(build, ("binfiles", 2, _table_fingerprint(sf_dir, "documents"))), "bin"
+        cache_publish(build, ("binfiles", 2, table_fingerprint(sf_dir, "documents"))), "bin"
     )
     back = spark.read.format("binaryFile").load(src)
     return back.select(
@@ -220,7 +219,7 @@ def src_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("bylang", 2, _table_fingerprint(sf_dir, "documents"))), "bylang"
+        cache_publish(build, ("bylang", 2, table_fingerprint(sf_dir, "documents"))), "bylang"
     )
     back = spark.read.parquet(src)
     return (
@@ -259,7 +258,7 @@ def src_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("jsonl", 2, _table_fingerprint(sf_dir))), "jsonl"
+        cache_publish(build, ("jsonl", 2, table_fingerprint(sf_dir))), "jsonl"
     )
     lines = spark.read.text(src)
     parsed = lines.select(
@@ -319,7 +318,7 @@ def src_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("fixedwidth", 1, _table_fingerprint(sf_dir))), "fw"
+        cache_publish(build, ("fixedwidth", 1, table_fingerprint(sf_dir))), "fw"
     )
     lines = spark.read.text(src)
     parsed = lines.select(
@@ -371,7 +370,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("xml", 1, _table_fingerprint(sf_dir, "supplier"))), "xml"
+        cache_publish(build, ("xml", 1, table_fingerprint(sf_dir, "supplier"))), "xml"
     )
     back = (
         spark.read.schema(
@@ -423,7 +422,7 @@ def src_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(into, "gen2"))
         )
 
-    base = _cache_publish(build, ("schema_evolve", 1, _table_fingerprint(sf_dir, "documents")))
+    base = cache_publish(build, ("schema_evolve", 1, table_fingerprint(sf_dir, "documents")))
     back = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(base, "gen1"), os.path.join(base, "gen2")
     )
@@ -477,7 +476,7 @@ def src_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("csv_bad", 1, _table_fingerprint(sf_dir))), "csv_bad"
+        cache_publish(build, ("csv_bad", 1, table_fingerprint(sf_dir))), "csv_bad"
     )
     back = (
         spark.read.schema(
@@ -530,7 +529,7 @@ def src_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         nested.write.mode("overwrite").json(os.path.join(into, "nested"))
 
     src = os.path.join(
-        _cache_publish(build, ("json_nested", 1, _table_fingerprint(sf_dir, "supplier"))),
+        cache_publish(build, ("json_nested", 1, table_fingerprint(sf_dir, "supplier"))),
         "nested",
     )
     back = spark.read.schema(
@@ -582,7 +581,7 @@ def src_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("parquet_bloom", 2, _table_fingerprint(sf_dir, "customer"))),
+        cache_publish(build, ("parquet_bloom", 2, table_fingerprint(sf_dir, "customer"))),
         "cust_bloom",
     )
     needles = ["Customer#000000042", "Customer#000000007", "Customer#000000123"]
@@ -642,7 +641,7 @@ def src_parquet_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("parquet_meta", 1, _table_fingerprint(sf_dir, "orders"))),
+        cache_publish(build, ("parquet_meta", 1, table_fingerprint(sf_dir, "orders"))),
         "orders_rg",
     )
 
@@ -707,7 +706,7 @@ def src_gzip_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("gzjson", 1, _table_fingerprint(sf_dir))), "gzjson"
+        cache_publish(build, ("gzjson", 1, table_fingerprint(sf_dir))), "gzjson"
     )
     lines = spark.read.text(src)
     parsed = lines.select(
@@ -755,7 +754,7 @@ def src_glob_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(build, ("tree", 1, _table_fingerprint(sf_dir, "documents"))),
+        cache_publish(build, ("tree", 1, table_fingerprint(sf_dir, "documents"))),
         "tree",
     )
     back = (
@@ -809,7 +808,7 @@ def src_wholetext(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write(r.text)
 
     src = os.path.join(
-        _cache_publish(build, ("docs_txt", 1, _table_fingerprint(sf_dir, "documents"))),
+        cache_publish(build, ("docs_txt", 1, table_fingerprint(sf_dir, "documents"))),
         "docs_txt",
     )
     back = (
@@ -886,7 +885,7 @@ def src_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish_features(spark, read_gpkg(gpkg_path), os.path.join(into, "topic"), "suppliers")
 
     src = os.path.join(
-        _cache_publish(build, ("gpkg", 1, _table_fingerprint(sf_dir, "supplier"))),
+        cache_publish(build, ("gpkg", 1, table_fingerprint(sf_dir, "supplier"))),
         "topic",
     )
 
@@ -952,8 +951,8 @@ def src_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
             _json.dump(recs, fh)
 
     src = os.path.join(
-        _cache_publish(
-            build, ("json_multiline", 1, _table_fingerprint(sf_dir, "part"))
+        cache_publish(
+            build, ("json_multiline", 1, table_fingerprint(sf_dir, "part"))
         ),
         "ml",
     )
@@ -1008,8 +1007,8 @@ def src_csv_quoted_newlines(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = os.path.join(
-        _cache_publish(
-            build, ("csv_newlines", 1, _table_fingerprint(sf_dir, "part"))
+        cache_publish(
+            build, ("csv_newlines", 1, table_fingerprint(sf_dir, "part"))
         ),
         "csvnl",
     )
@@ -1181,8 +1180,8 @@ def src_varint_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.rdd.mapPartitions(write_part).count()
 
     src = os.path.join(
-        _cache_publish(
-            build, ("varintframes", 2, _table_fingerprint(sf_dir, "events"))
+        cache_publish(
+            build, ("varintframes", 2, table_fingerprint(sf_dir, "events"))
         ),
         "frames",
     )
@@ -1296,7 +1295,7 @@ def src_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.rdd.mapPartitions(write_part).count()
 
     src = os.path.join(
-        _cache_publish(build, ("arrowipc", 2, _table_fingerprint(sf_dir, "documents"))),
+        cache_publish(build, ("arrowipc", 2, table_fingerprint(sf_dir, "documents"))),
         "ipc",
     )
     files = spark.read.format("binaryFile").load(src).select("content")
@@ -1360,7 +1359,7 @@ def src_sequencefile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).saveAsSequenceFile(fdir)
 
     src = os.path.join(
-        _cache_publish(build, ("seqfile", 1, _table_fingerprint(sf_dir, "events"))),
+        cache_publish(build, ("seqfile", 1, table_fingerprint(sf_dir, "events"))),
         "seq",
     )
     rdd = spark.sparkContext.sequenceFile(src)
@@ -1513,7 +1512,7 @@ def src_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.rdd.mapPartitions(write_part).count()
 
     src = os.path.join(
-        _cache_publish(build, ("warc", 2, _table_fingerprint(sf_dir, "documents"))),
+        cache_publish(build, ("warc", 2, table_fingerprint(sf_dir, "documents"))),
         "warc",
     )
     files = spark.read.format("binaryFile").load(src).select("content")
@@ -1636,7 +1635,7 @@ def src_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.rdd.mapPartitions(write_part).count()
 
     src = os.path.join(
-        _cache_publish(build, ("zipsrc", 1, _table_fingerprint(sf_dir, "documents"))),
+        cache_publish(build, ("zipsrc", 1, table_fingerprint(sf_dir, "documents"))),
         "zip",
     )
     files = spark.read.format("binaryFile").load(src).select("content")
@@ -1802,7 +1801,7 @@ def src_tar(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.rdd.mapPartitions(write_part).count()
 
     src = os.path.join(
-        _cache_publish(build, ("tarsrc", 1, _table_fingerprint(sf_dir, "documents"))),
+        cache_publish(build, ("tarsrc", 1, table_fingerprint(sf_dir, "documents"))),
         "tar",
     )
     files = spark.read.format("binaryFile").load(src).select("content")
@@ -1924,7 +1923,7 @@ def src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.rdd.mapPartitions(write_part).count()
 
     src = os.path.join(
-        _cache_publish(build, ("xmlsrc", 1, _table_fingerprint(sf_dir, "documents"))),
+        cache_publish(build, ("xmlsrc", 1, table_fingerprint(sf_dir, "documents"))),
         "xml",
     )
     files = spark.read.format("binaryFile").load(src).select("content")
@@ -2003,8 +2002,8 @@ def src_delta_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as fh:
                 fh.write("\n".join(_json.dumps(a) for a in actions))
 
-    base = _cache_publish(
-        build, ("deltalog", 1, _table_fingerprint(sf_dir, "documents"))
+    base = cache_publish(
+        build, ("deltalog", 1, table_fingerprint(sf_dir, "documents"))
     )
     log_dir = os.path.join(base, "_delta_log")
     versions = sorted(

@@ -26,7 +26,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..registry import query
+from ..registry import memory_view, query, scratch_query
 
 N_ROWS = 20_000
 N_PARTS = 8
@@ -165,7 +165,7 @@ def _ensure_sink_registered(spark: SparkSession) -> None:
     spark._jsonlsink_registered = True
 
 
-@query(
+@scratch_query(
     "sink_py_datasource",
     oracle="""
 SELECT event_type,
@@ -178,7 +178,7 @@ WHERE event_id % 4 = 0
 GROUP BY event_type
 """,
 )
-def sink_py_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_py_datasource(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Write through the custom Python DataSource SINK (task-side temp
     files + driver-side atomic commit — the two-phase protocol above),
     then read the committed JSONL back and aggregate: a lost, doubled,
@@ -186,39 +186,28 @@ def sink_py_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity story: Python-native read path (src_py_datasource) AND
     write path with commit/abort semantics, no JVM code."""
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from . import load_table
 
     _ensure_sink_registered(spark)
-    from ..cache import fast_scratch_root
-    out = _tempfile.mkdtemp(prefix="pyds_sink_", dir=fast_scratch_root())
-    try:
-        (
-            load_table(spark, sf_dir, "events")
-            .where(F.col("event_id") % 4 == 0)
-            .select("event_id", "event_type", "value")
-            .write.format("jsonlsink")
-            .option("path", out)
-            .mode("append")
-            .save()
-        )
-        back = spark.read.schema("event_id long, event_type string, value double").json(
-            _os.path.join(out, "part-*.jsonl")
-        )
-        return (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(28,10)")).cast("double").alias("value_sum"),
-                F.min("event_id").alias("min_id"),
-                F.max("event_id").alias("max_id"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        _shutil.rmtree(out, ignore_errors=True)
+    (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("event_id") % 4 == 0)
+        .select("event_id", "event_type", "value")
+        .write.format("jsonlsink")
+        .option("path", work)
+        .mode("append")
+        .save()
+    )
+    back = spark.read.schema("event_id long, event_type string, value double").json(
+        _os.path.join(work, "part-*.jsonl")
+    )
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(28,10)")).cast("double").alias("value_sum"),
+        F.min("event_id").alias("min_id"),
+        F.max("event_id").alias("max_id"),
+    )
 
 
 _STREAM_BATCH = 5_000  # rows per micro-batch pull
@@ -271,7 +260,7 @@ def _ensure_stream_registered(spark: SparkSession) -> None:
     spark._detfeedstream_registered = True
 
 
-@query(
+@scratch_query(
     "s_py_source_stream",
     oracle=f"""
 SELECT (((i * {_A}) % {_M}) % 10) AS bucket,
@@ -281,7 +270,7 @@ FROM range({_STREAM_TOTAL}) t(i)
 GROUP BY 1
 """,
 )
-def src_py_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def src_py_stream(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Drain the custom Python STREAMING source to completion
     (availableNow) through a stateful per-bucket aggregate in complete
     mode — proving the offset-based micro-batch pull path: 4 batches
@@ -291,13 +280,8 @@ def src_py_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     and now an offset-tracked stream — the R3 Kafka-consumer shape
     with no broker and no JVM code.""".format(batch=_STREAM_BATCH)
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-    import uuid as _uuid
 
     _ensure_stream_registered(spark)
-    from ..cache import fast_scratch_root
-    work = _tempfile.mkdtemp(prefix="pyds_stream_", dir=fast_scratch_root())
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
@@ -307,10 +291,11 @@ def src_py_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("h").alias("h_sum"))
         )
-        name = "mem_" + _uuid.uuid4().hex[:12]
+        name = memory_view(work)
         # Python streaming sources don't support availableNow (Spark
-        # falls back to ONE batch); drain with normal micro-batches and
-        # stop once the complete-mode aggregate covers the whole feed.
+        # falls back to ONE batch), so streaming.jobs.run_to_memory
+        # cannot drain this one: run normal micro-batches and stop once
+        # the complete-mode aggregate covers the whole feed.
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -328,10 +313,9 @@ def src_py_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             _time.sleep(0.3)
         q.stop()
         q.awaitTermination()
-        return spark.table(name).localCheckpoint()
+        return spark.table(name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _shutil.rmtree(work, ignore_errors=True)
 
 
 class _JsonlStreamWriter(DataSourceStreamWriter):
@@ -400,7 +384,7 @@ def _ensure_stream_sink_registered(spark: SparkSession) -> None:
     spark._jsonlsinkstream_registered = True
 
 
-@query(
+@scratch_query(
     "sink_py_stream",
     oracle="""
 SELECT event_type,
@@ -410,7 +394,7 @@ FROM events
 GROUP BY event_type
 """,
 )
-def sink_py_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sink_py_stream(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """End-to-end STREAMING write through a custom Python
     DataSourceStreamWriter: the replayed event stream flows through
     the per-batch two-phase commit protocol (task temp files ->
@@ -424,49 +408,37 @@ def sink_py_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rename is a per-batch driver-side metadata operation, exactly the
     shape of a real object-store streaming sink."""
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from ..streaming.jobs import replay_events_as_stream
 
-    from ..cache import fast_scratch_root
-
     _ensure_stream_sink_registered(spark)
-    work = _tempfile.mkdtemp(prefix="pyds_streamsink_", dir=fast_scratch_root())
     out = _os.path.join(work, "out")
-    _os.makedirs(out, exist_ok=True)
-    try:
-        stream = (
-            replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-            .select("event_id", "event_type", "value")
-            # 4 sink tasks per micro-batch: every task is a Python
-            # worker round-trip; the default file-split parallelism
-            # spawned ~32 of them per batch for a 25k-row chunk
-            .coalesce(4)
-        )
-        q = (
-            stream.writeStream.format("jsonlsinkstream")
-            .option("path", out)
-            .option("checkpointLocation", _os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        # explicit schema: inference would scan every committed file a
-        # second time (guide §6); the declared types match what
-        # inference produced, so the parsed values are identical
-        back = spark.read.schema("event_id long, event_type string, value double").json(
-            _os.path.join(out, "batch-*.jsonl")
-        )
-        return (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                (F.sum(F.col("value").cast("decimal(28,10)")) * 1000000)
-                .cast("bigint")
-                .alias("mass_micros"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
+    _os.makedirs(out)
+    stream = (
+        replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+        .select("event_id", "event_type", "value")
+        # 4 sink tasks per micro-batch: every task is a Python
+        # worker round-trip; the default file-split parallelism
+        # spawned ~32 of them per batch for a 25k-row chunk
+        .coalesce(4)
+    )
+    q = (
+        stream.writeStream.format("jsonlsinkstream")
+        .option("path", out)
+        .option("checkpointLocation", _os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    # explicit schema: inference would scan every committed file a
+    # second time (guide §6); the declared types match what
+    # inference produced, so the parsed values are identical
+    back = spark.read.schema("event_id long, event_type string, value double").json(
+        _os.path.join(out, "batch-*.jsonl")
+    )
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        (F.sum(F.col("value").cast("decimal(28,10)")) * 1000000)
+        .cast("bigint")
+        .alias("mass_micros"),
+    )

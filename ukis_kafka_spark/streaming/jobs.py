@@ -13,41 +13,29 @@ production source; a file stream delivers the same (value: binary)
 rows without a broker. ``src_kafka_shape`` runs the full wire path:
 feature → msgpack envelope bytes → stream → decode → aggregate.
 
-Scratch space lives under the repo (.tmp/, gitignored) and is removed
-after each run.
+Every operator here is a ``registry.scratch_query``: it gets a private
+``work`` dir for its stream source copy, checkpoint and sink, and the
+registry pins the result, drops the memory-sink view and removes the
+dir after the call.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..cache import cache_publish, table_fingerprint
+from ..registry import memory_view, scratch_query
 from ..sources import load_table
 
 _EVENT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 )
-
-
-def _scratch_dir() -> str:
-    from ..cache import fast_scratch_root
-
-    return tempfile.mkdtemp(prefix="stream_", dir=fast_scratch_root())
-
-
-# Build-once input caching lives in ukis_kafka_spark.cache (shared by
-# streaming, sources, and bench); the old private names stay as
-# aliases for existing callers.
-from ..cache import cache_publish as _cache_publish  # noqa: E402
-from ..cache import table_fingerprint as _table_fingerprint  # noqa: E402
 
 
 def _replay_chunk_cache(
@@ -80,8 +68,8 @@ def _replay_chunk_cache(
             os.utime(dst, (base_mtime + order * 60, base_mtime + order * 60))
         shutil.rmtree(stage, ignore_errors=True)
 
-    key = ("replay", 2, _table_fingerprint(sf_dir), n_chunks, shuffle_chunk)
-    return _cache_publish(build, key)
+    key = ("replay", 2, table_fingerprint(sf_dir), n_chunks, shuffle_chunk)
+    return cache_publish(build, key)
 
 
 def replay_events_as_stream(
@@ -119,6 +107,10 @@ def run_to_memory(stream_df: DataFrame, work: str, mode: str = "append") -> Data
     """Run a streaming DataFrame to completion (availableNow) into a
     memory sink; return the final table as a batch DataFrame.
 
+    The sink's view is ``registry.memory_view(work)`` and its checkpoint
+    ``work/ckpt``; one run per ``work`` dir — a second one raises
+    ``FileExistsError`` rather than resume the first run's checkpoint.
+
     State-store tuning: a stateful operator creates one state store per
     shuffle partition per micro-batch checkpoint. The replayed corpus
     has ~150 keys, so a handful of partitions carries the state with
@@ -128,15 +120,17 @@ def run_to_memory(stream_df: DataFrame, work: str, mode: str = "append") -> Data
     keep the cores-wide setting. Partition count never affects results:
     state is keyed and the sink is compared order-insensitively."""
     spark = stream_df.sparkSession
+    ckpt = os.path.join(work, "ckpt")
+    os.makedirs(ckpt)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        name = "mem_" + uuid.uuid4().hex[:12]
+        name = memory_view(work)
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
-            .option("checkpointLocation", os.path.join(work, "ckpt_" + name))
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
@@ -144,14 +138,6 @@ def run_to_memory(stream_df: DataFrame, work: str, mode: str = "append") -> Data
         return spark.table(name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _with_scratch(fn):
-    work = _scratch_dir()
-    try:
-        return fn(work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _subseq_prefix() -> str:
@@ -163,7 +149,7 @@ def _subseq_prefix() -> str:
     return SUBSEQ_ORACLE_PREFIX
 
 
-@query(
+@scratch_query(
     "s_stateful_count",
     oracle="""
 SELECT user_id, count(*) AS n_events
@@ -171,22 +157,18 @@ FROM events
 GROUP BY user_id
 """,
 )
-def s_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_stateful_count(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Running per-user counts as a streaming job (complete mode —
     unbounded keyed state, the streaming twin of groupBy().count()).
     The final state must equal the batch aggregate exactly."""
-
-    def go(work: str) -> DataFrame:
-        # 4 micro-batches: complete-mode totals are chunk-count-invariant
-        # and each extra micro-batch is a full state checkpoint cycle
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        counts = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-        return run_to_memory(counts, work, mode="complete").localCheckpoint()
-
-    return _with_scratch(go)
+    # 4 micro-batches: complete-mode totals are chunk-count-invariant
+    # and each extra micro-batch is a full state checkpoint cycle
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    counts = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
+    return run_to_memory(counts, work, mode="complete")
 
 
-@query(
+@scratch_query(
     "s_dedup_watermark",
     oracle="""
 SELECT event_type, count(DISTINCT event_id) AS n
@@ -194,27 +176,23 @@ FROM events
 GROUP BY event_type
 """,
 )
-def s_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_dedup_watermark(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Streaming dedup by event_id within a 10-minute watermark
     (R9 parity: at-least-once Kafka delivery needs idempotent sinks;
     dropDuplicatesWithinWatermark makes the pipeline itself
     exactly-once-per-key). Fed in ts order the watermark never drops a
     live row, so the result equals batch COUNT(DISTINCT)."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        deduped = (
-            stream.withWatermark("ts", "10 minutes")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        return run_to_memory(deduped, work, mode="complete").localCheckpoint()
-
-    return _with_scratch(go)
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    deduped = (
+        stream.withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return run_to_memory(deduped, work, mode="complete")
 
 
-@query(
+@scratch_query(
     "s_tumble_watermark",
     oracle="""
 SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_start, count(*) AS n
@@ -223,28 +201,24 @@ GROUP BY 1
 HAVING hour_start + 3600 <= (SELECT CAST(floor(epoch(max(ts))) AS BIGINT) - 600 FROM events)
 """,
 )
-def s_tumble_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_tumble_watermark(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Watermarked tumbling-window counts in append mode — a window only
     emits once the watermark (max event time − 10 min) passes its end,
     so the stream's final, still-open window is withheld. The oracle
     applies the same closure rule (HAVING end ≤ final watermark)."""
-
-    def go(work: str) -> DataFrame:
-        # 4 micro-batches: the emitted set depends only on the *final*
-        # watermark (in-order replay), not on batch granularity
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.unix_timestamp(F.col("w.start")).alias("hour_start"), "n")
-        )
-        return run_to_memory(agg, work, mode="append").localCheckpoint()
-
-    return _with_scratch(go)
+    # 4 micro-batches: the emitted set depends only on the *final*
+    # watermark (in-order replay), not on batch granularity
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    agg = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.unix_timestamp(F.col("w.start")).alias("hour_start"), "n")
+    )
+    return run_to_memory(agg, work, mode="append")
 
 
-@query(
+@scratch_query(
     "s_watermark_late",
     oracle="""
 WITH ordered AS (
@@ -261,7 +235,7 @@ GROUP BY 1
 HAVING hour_start + 3600 <= (SELECT CAST(floor(epoch(max(ts))) AS BIGINT) - 600 FROM events)
 """,
 )
-def s_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_watermark_late(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Late-data semantics: the earliest chunk of events arrives LAST
     (after the watermark has advanced past it), so a 10-minute
     watermark drops those rows from the append-mode windowed count.
@@ -275,18 +249,14 @@ def s_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order in both engines); (2) the closure rule — only windows
     whose end ≤ final watermark have been evicted to the append sink.
     The unit test additionally asserts the drop happens at all."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=8, shuffle_chunk=0)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.unix_timestamp(F.col("w.start")).alias("hour_start"), "n")
-        )
-        return run_to_memory(agg, work, mode="append").localCheckpoint()
-
-    return _with_scratch(go)
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=8, shuffle_chunk=0)
+    agg = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.unix_timestamp(F.col("w.start")).alias("hour_start"), "n")
+    )
+    return run_to_memory(agg, work, mode="append")
 
 
 # Micro-batch count for the two stream-stream joins. Module-level so
@@ -295,7 +265,7 @@ def s_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_JOIN_CHUNKS = 2
 
 
-@query(
+@scratch_query(
     "s_stream_join",
     oracle="""
 SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id
@@ -305,7 +275,7 @@ JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
 """,
 )
-def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_stream_join(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Stream-stream inner join with event-time bound: each click joins
     purchases by the same user within the following hour. Watermarks on
     both sides + the time-range condition let Spark bound the join
@@ -327,40 +297,36 @@ def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_stream_join_chunk_count_invariant
     pins 2-vs-4 equality; each dropped batch saves a full state-store
     commit round (measured 6.5 s → ~4 s in-pass at sf0.1)."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=_STREAM_JOIN_CHUNKS)
-        clicks = (
-            stream.where(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "10 minutes")
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=_STREAM_JOIN_CHUNKS)
+    clicks = (
+        stream.where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id"),
+            F.col("ts").alias("click_ts"),
         )
-        purchases = (
-            stream.where(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "10 minutes")
+        .withWatermark("click_ts", "10 minutes")
+    )
+    purchases = (
+        stream.where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("p_ts") >= F.col("click_ts"))
-            & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-            "inner",
-        ).select("click_id", "purchase_id", "user_id")
-        return run_to_memory(joined, work, mode="append").localCheckpoint()
+        .withWatermark("p_ts", "10 minutes")
+    )
+    joined = clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("p_ts") >= F.col("click_ts"))
+        & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        "inner",
+    ).select("click_id", "purchase_id", "user_id")
+    return run_to_memory(joined, work, mode="append")
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "src_kafka_shape",
     oracle="""
 SELECT event_type, count(*) AS n,
@@ -369,7 +335,7 @@ FROM events
 GROUP BY event_type
 """,
 )
-def src_kafka_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
+def src_kafka_shape(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Full wire-path parity with the reference's Kafka pipeline
     (R2→R3): every event becomes a WKB point + properties inside a
     msgpack envelope (binary `value` column, exactly the Kafka message
@@ -407,32 +373,29 @@ def src_kafka_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(into, "wire")
         )
 
-    def go(work: str) -> DataFrame:
-        # per-row Python envelope encode is the dominant cost (~3.3 s at
-        # sf0.1) and the corpus is pure function of the input table —
-        # build once, stream from the shared cache (read-only here)
-        src = os.path.join(
-            _cache_publish(build_wire, ("wire", 2, _table_fingerprint(sf_dir))), "wire"
-        )
-        stream = envelope_raw_stream(spark, wire_dir=src)
-        feats = decode_feature_stream(stream)
-        # event fields ride in props_json; extraction is JVM-side
-        # (from_json round-trips json.dumps exactly for long/str/double)
-        decoded = feats.select(
-            F.from_json(
-                "props_json", "event_id long, event_type string, value double"
-            ).alias("p")
-        ).select("p.event_id", "p.event_type", "p.value")
-        agg = decoded.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(28,10)")).cast("double").alias("value_sum"),
-        )
-        return run_to_memory(agg, work, mode="complete").localCheckpoint()
-
-    return _with_scratch(go)
+    # per-row Python envelope encode is the dominant cost (~3.3 s at
+    # sf0.1) and the corpus is pure function of the input table —
+    # build once, stream from the shared cache (read-only here)
+    src = os.path.join(
+        cache_publish(build_wire, ("wire", 2, table_fingerprint(sf_dir))), "wire"
+    )
+    stream = envelope_raw_stream(spark, wire_dir=src)
+    feats = decode_feature_stream(stream)
+    # event fields ride in props_json; extraction is JVM-side
+    # (from_json round-trips json.dumps exactly for long/str/double)
+    decoded = feats.select(
+        F.from_json(
+            "props_json", "event_id long, event_type string, value double"
+        ).alias("p")
+    ).select("p.event_id", "p.event_type", "p.value")
+    agg = decoded.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("value").cast("decimal(28,10)")).cast("double").alias("value_sum"),
+    )
+    return run_to_memory(agg, work, mode="complete")
 
 
-@query(
+@scratch_query(
     "s_custom_state",
     oracle="""
 SELECT user_id, count(*) AS n_events,
@@ -441,7 +404,7 @@ FROM events
 GROUP BY user_id
 """,
 )
-def s_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_custom_state(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState (arbitrary
     per-key state; the Spark 4 transformWithStateInPandas API needs
     protobuf, absent offline — the dataflow is identical): per-user
@@ -460,41 +423,37 @@ def s_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((n, mx))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "max_value": [mx]})
 
-    def go(work: str) -> DataFrame:
-        # 2 micro-batches (round-8 shave): each batch pays a Python
-        # state-worker round per partition — the dominant cost — and
-        # the result is PROVABLY chunk-count-invariant: per user the
-        # emissions are prefix aggregates of a monotone (count, max),
-        # so max-over-emissions = the total for ANY chunking >= 1
-        # (the final groupBy below); the oracle is the batch
-        # aggregate, untouched by the chunk count.
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
-        updates = (
-            stream.select("user_id", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                running_stats,
-                outputStructType="user_id long, n_events long, max_value double",
-                stateStructType="n long, mx double",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    # 2 micro-batches (round-8 shave): each batch pays a Python
+    # state-worker round per partition — the dominant cost — and
+    # the result is PROVABLY chunk-count-invariant: per user the
+    # emissions are prefix aggregates of a monotone (count, max),
+    # so max-over-emissions = the total for ANY chunking >= 1
+    # (the final groupBy below); the oracle is the batch
+    # aggregate, untouched by the chunk count.
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
+    updates = (
+        stream.select("user_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            running_stats,
+            outputStructType="user_id long, n_events long, max_value double",
+            stateStructType="n long, mx double",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        mem = run_to_memory(updates, work, mode="update")
-        # counts/maxes are monotone across updates -> final state per user
-        return (
-            mem.groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("max_value").alias("max_value"),
-            )
-            .localCheckpoint()
+    )
+    mem = run_to_memory(updates, work, mode="update")
+    # counts/maxes are monotone across updates -> final state per user
+    return (
+        mem.groupBy("user_id")
+        .agg(
+            F.max("n_events").alias("n_events"),
+            F.max("max_value").alias("max_value"),
         )
+    )
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "s_session_stream",
     oracle="""
 WITH flagged AS (
@@ -519,7 +478,7 @@ SELECT user_id, session_start, n_events FROM sessions
 WHERE session_last_exact + 1800 + 600 <= (SELECT epoch(max(ts)) FROM events)
 """,
 )
-def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_session_stream(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Session windows (30-min gap) per user under streaming with a
     10-min watermark, append mode: a session emits once the watermark
     passes its end (last event + gap). The oracle replays the same
@@ -527,26 +486,22 @@ def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose end + gap + delay precede the final watermark appear.
     Real streaming session-merge state; in-order replay keeps it
     deterministic."""
-
-    def go(work: str) -> DataFrame:
-        # 4 micro-batches — same final-watermark closure rule as above
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.unix_timestamp(F.col("w.start")).alias("session_start"),
-                "n_events",
-            )
+    # 4 micro-batches — same final-watermark closure rule as above
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    agg = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.unix_timestamp(F.col("w.start")).alias("session_start"),
+            "n_events",
         )
-        return run_to_memory(agg, work, mode="append").localCheckpoint()
+    )
+    return run_to_memory(agg, work, mode="append")
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "s_foreach_upsert",
     oracle="""
 SELECT user_id, event_id AS last_event_id, event_type AS last_type, value AS last_value
@@ -557,7 +512,7 @@ FROM (
 ) WHERE rn = 1
 """,
 )
-def s_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_foreach_upsert(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Streaming → keyed upsert sink via foreachBatch — the reference's
     R7/R9 consume-upsert loop as a Structured Streaming job: each
     micro-batch reduces to its per-user latest event (event_id is
@@ -567,45 +522,42 @@ def s_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     PostGIS/Delta writer uses, end to end, with an exact oracle."""
     from ..sinks.files import upsert_parquet
 
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        target = os.path.join(work, "target")
-        sel = stream.select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_type"),
-            F.col("value").alias("last_value"),
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    target = os.path.join(work, "target")
+    sel = stream.select(
+        "user_id",
+        F.col("event_id").alias("last_event_id"),
+        F.col("event_type").alias("last_type"),
+        F.col("value").alias("last_value"),
+    )
+
+    def handle(batch_df, batch_id):
+        w = Window.partitionBy("user_id").orderBy(F.col("last_event_id").desc())
+        latest = (
+            batch_df.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
         )
-
-        def handle(batch_df, batch_id):
-            w = Window.partitionBy("user_id").orderBy(F.col("last_event_id").desc())
-            latest = (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
+        if os.path.exists(target):
+            upsert_parquet(
+                spark, spark.read.parquet(target), latest, ["user_id"], target
             )
-            if os.path.exists(target):
-                upsert_parquet(
-                    spark, spark.read.parquet(target), latest, ["user_id"], target
-                )
-            else:
-                latest.write.parquet(target)
+        else:
+            latest.write.parquet(target)
 
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                sel.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", os.path.join(work, "ckpt_upsert"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        return spark.read.parquet(target).localCheckpoint()
-
-    return _with_scratch(go)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = (
+            sel.writeStream.foreachBatch(handle)
+            .option("checkpointLocation", os.path.join(work, "ckpt_upsert"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.read.parquet(target)
 
 
 _TYPE_WEIGHTS = [
@@ -617,7 +569,7 @@ _TYPE_WEIGHTS = [
 ]
 
 
-@query(
+@scratch_query(
     "s_static_join",
     oracle="""
 SELECT e.event_type,
@@ -631,7 +583,7 @@ FROM events e
 GROUP BY e.event_type
 """,
 )
-def s_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_static_join(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Stream-static join: the event stream enriches against a static
     dimension (event-type weights) with a plain broadcast hash join per
     micro-batch — no streaming state at all, the pattern for joining a
@@ -644,21 +596,18 @@ def s_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     two batches still exercise the per-batch re-join + state update."""
     dim = spark.createDataFrame(_TYPE_WEIGHTS, "event_type string, weight double")
 
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
-        enriched = stream.join(F.broadcast(dim), "event_type")
-        agg = enriched.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("value") * F.col("weight")).cast("decimal(28,10)"))
-            .cast("double")
-            .alias("weighted_value"),
-        )
-        return run_to_memory(agg, work, mode="complete").localCheckpoint()
-
-    return _with_scratch(go)
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
+    enriched = stream.join(F.broadcast(dim), "event_type")
+    agg = enriched.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum((F.col("value") * F.col("weight")).cast("decimal(28,10)"))
+        .cast("double")
+        .alias("weighted_value"),
+    )
+    return run_to_memory(agg, work, mode="complete")
 
 
-@query(
+@scratch_query(
     "s_stream_union",
     oracle="""
 SELECT event_type,
@@ -668,45 +617,41 @@ FROM events
 GROUP BY event_type
 """,
 )
-def s_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_stream_union(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Union of two independent streaming sources (disjoint halves of
     the replay corpus fed through two FileStreamSources) aggregated in
     complete mode — the multi-topic fan-in every Kafka deployment has
     (N topics → one logical stream). Spark runs each source's own
     offset tracking and unions per micro-batch; the final state must
     equal the single-source batch aggregate exactly."""
-
-    def go(work: str) -> DataFrame:
-        cache = _replay_chunk_cache(spark, sf_dir, 4, None)
-        files = sorted(os.listdir(cache))
-        srcs = []
-        for sub, fs in (("a", files[::2]), ("b", files[1::2])):
-            d = os.path.join(work, sub)
-            os.makedirs(d, exist_ok=True)
-            for f in fs:
-                try:
-                    os.link(os.path.join(cache, f), os.path.join(d, f))
-                except OSError:
-                    shutil.copy2(os.path.join(cache, f), os.path.join(d, f))
-            srcs.append(
-                spark.readStream.schema(_EVENT_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(d)
-            )
-        agg = (
-            srcs[0].unionByName(srcs[1])
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").cast("decimal(28,10)")).cast("double").alias("total_value"),
-            )
+    cache = _replay_chunk_cache(spark, sf_dir, 4, None)
+    files = sorted(os.listdir(cache))
+    srcs = []
+    for sub, fs in (("a", files[::2]), ("b", files[1::2])):
+        d = os.path.join(work, sub)
+        os.makedirs(d, exist_ok=True)
+        for f in fs:
+            try:
+                os.link(os.path.join(cache, f), os.path.join(d, f))
+            except OSError:
+                shutil.copy2(os.path.join(cache, f), os.path.join(d, f))
+        srcs.append(
+            spark.readStream.schema(_EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(d)
         )
-        return run_to_memory(agg, work, mode="complete").localCheckpoint()
+    agg = (
+        srcs[0].unionByName(srcs[1])
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(28,10)")).cast("double").alias("total_value"),
+        )
+    )
+    return run_to_memory(agg, work, mode="complete")
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "s_slide_watermark",
     oracle="""
 SELECT win_start, count(*) AS n
@@ -719,7 +664,7 @@ GROUP BY win_start
 HAVING win_start + 3600 <= (SELECT CAST(floor(epoch(max(ts))) AS BIGINT) - 600 FROM events)
 """,
 )
-def s_slide_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_slide_watermark(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Watermarked *sliding*-window counts (1 h size / 30 min slide) in
     append mode: every event feeds two overlapping windows, and a
     window emits only once the watermark (max event time − 10 min)
@@ -730,21 +675,17 @@ def s_slide_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: sliding state is (size/slide)× tumbling state; the
     watermark bounds it to ~2 open windows per key partition, which is
     what keeps this viable on an unbounded stream."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.unix_timestamp(F.col("w.start")).alias("win_start"), "n")
-        )
-        return run_to_memory(agg, work, mode="append").localCheckpoint()
-
-    return _with_scratch(go)
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    agg = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.unix_timestamp(F.col("w.start")).alias("win_start"), "n")
+    )
+    return run_to_memory(agg, work, mode="append")
 
 
-@query(
+@scratch_query(
     "s_archive_sink",
     oracle="""
 SELECT event_type, count(*) AS n, count(DISTINCT event_id) AS n_ids
@@ -752,7 +693,7 @@ FROM events
 GROUP BY event_type
 """,
 )
-def s_archive_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_archive_sink(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Streaming filesystem archiver (the R8 consumer as a REAL
     streaming job, not a batch twin): the replayed event stream writes
     straight to a parquet directory partitioned by event_type via the
@@ -763,34 +704,29 @@ def s_archive_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     against double-committed files. At scale this is the
     Kafka->data-lake landing job; partitionBy gives the layer/date
     layout the reference's filesystem consumer writes."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        target = os.path.join(work, "archive")
-        q = (
-            stream.select("event_id", "event_type", "value")
-            .writeStream.format("parquet")
-            .option("path", target)
-            .option("checkpointLocation", os.path.join(work, "ckpt_archive"))
-            .partitionBy("event_type")
-            .trigger(availableNow=True)
-            .start()
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    target = os.path.join(work, "archive")
+    q = (
+        stream.select("event_id", "event_type", "value")
+        .writeStream.format("parquet")
+        .option("path", target)
+        .option("checkpointLocation", os.path.join(work, "ckpt_archive"))
+        .partitionBy("event_type")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return (
+        spark.read.parquet(target)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("event_id").alias("n_ids"),
         )
-        q.awaitTermination()
-        return (
-            spark.read.parquet(target)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct("event_id").alias("n_ids"),
-            )
-            .localCheckpoint()
-        )
-
-    return _with_scratch(go)
+    )
 
 
-@query(
+@scratch_query(
     "s_stream_left_join",
     oracle="""
 WITH c AS (SELECT event_id AS click_id, user_id, ts FROM events WHERE event_type = 'click'),
@@ -813,7 +749,7 @@ WHERE c.click_id NOT IN (SELECT click_id FROM j)
   AND c.ts + INTERVAL 1 HOUR < wm.w
 """,
 )
-def s_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_stream_left_join(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Stream-stream LEFT OUTER join with event-time bound: every click
     joins same-user purchases in the following hour; clicks that never
     match emit a NULL-extended row — but only once the watermark has
@@ -829,42 +765,38 @@ def s_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle mirrors exactly that (same style as
     s_session_stream's withheld-final-window rule). State stays
     bounded by the watermark on both sides at any scale."""
-
-    def go(work: str) -> DataFrame:
-        # 2 replay chunks (round-7 streaming-floor shave): this job's
-        # result is chunk-count-INVARIANT — per-event emission / final-
-        # watermark closure only, no per-chunk prefix oracle — and two
-        # batches still exercise cross-batch state; 4 -> 2 chunks cut
-        # ~1.5-2 s of per-micro-batch state-commit floor at sf0.1
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
-        clicks = (
-            stream.where(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "10 minutes")
+    # 2 replay chunks (round-7 streaming-floor shave): this job's
+    # result is chunk-count-INVARIANT — per-event emission / final-
+    # watermark closure only, no per-chunk prefix oracle — and two
+    # batches still exercise cross-batch state; 4 -> 2 chunks cut
+    # ~1.5-2 s of per-micro-batch state-commit floor at sf0.1
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
+    clicks = (
+        stream.where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id"),
+            F.col("ts").alias("click_ts"),
         )
-        purchases = (
-            stream.where(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "10 minutes")
+        .withWatermark("click_ts", "10 minutes")
+    )
+    purchases = (
+        stream.where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("p_ts") >= F.col("click_ts"))
-            & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-            "leftOuter",
-        ).select("click_id", "purchase_id", "user_id")
-        return run_to_memory(joined, work, mode="append").localCheckpoint()
-
-    return _with_scratch(go)
+        .withWatermark("p_ts", "10 minutes")
+    )
+    joined = clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("p_ts") >= F.col("click_ts"))
+        & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        "leftOuter",
+    ).select("click_id", "purchase_id", "user_id")
+    return run_to_memory(joined, work, mode="append")
 
 
 def _update_mode_oracle() -> str:
@@ -887,8 +819,8 @@ SELECT event_type, n FROM ({union}) WHERE delta > 0
 """
 
 
-@query("s_update_mode", oracle=_update_mode_oracle())
-def s_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query("s_update_mode", oracle=_update_mode_oracle())
+def s_update_mode(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Update output mode: a running per-type count where each
     micro-batch emits ONLY the keys whose aggregate changed — the
     third output-mode contract (append: s_session_stream, complete:
@@ -901,16 +833,12 @@ def s_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a nonzero in-chunk delta. Deterministic because the chunked
     arrival order is pinned and ts is corpus-verified globally
     unique."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-        return run_to_memory(agg, work, mode="update").localCheckpoint()
-
-    return _with_scratch(go)
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    return run_to_memory(agg, work, mode="update")
 
 
-@query(
+@scratch_query(
     "s_chained_aggs",
     oracle="""
 WITH wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM events),
@@ -930,7 +858,7 @@ WHERE hour_end <= wm.w
 GROUP BY hour_start
 """,
 )
-def s_chained_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_chained_aggs(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Two CHAINED stateful aggregations in one streaming job (a
     Spark 3.4+ capability: multiple stateful operators in append
     mode): hourly per-user counts, then an hourly rollup over users —
@@ -940,34 +868,30 @@ def s_chained_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits once the watermark (max ts − 10 min under the pinned
     replay) passes its end — which the oracle states directly. State
     is two window stores, both watermark-bounded."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        per_user = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    per_user = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    rollup = (
+        per_user.groupBy(F.window(F.window_time("w"), "1 hour").alias("w2"))
+        .agg(
+            F.count(F.lit(1)).alias("n_users"),
+            F.sum("n").alias("n_events"),
+            F.max("n").alias("max_user_events"),
         )
-        rollup = (
-            per_user.groupBy(F.window(F.window_time("w"), "1 hour").alias("w2"))
-            .agg(
-                F.count(F.lit(1)).alias("n_users"),
-                F.sum("n").alias("n_events"),
-                F.max("n").alias("max_user_events"),
-            )
-            .select(
-                F.unix_timestamp(F.col("w2.start")).alias("hour_start"),
-                "n_users",
-                "n_events",
-                "max_user_events",
-            )
+        .select(
+            F.unix_timestamp(F.col("w2.start")).alias("hour_start"),
+            "n_users",
+            "n_events",
+            "max_user_events",
         )
-        return run_to_memory(rollup, work, mode="append").localCheckpoint()
+    )
+    return run_to_memory(rollup, work, mode="append")
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "s_stream_fullouter_join",
     oracle="""
 WITH c AS (SELECT event_id AS click_id, user_id, ts FROM events WHERE event_type = 'click'),
@@ -995,7 +919,7 @@ WHERE p.purchase_id NOT IN (SELECT purchase_id FROM j)
   AND p.ts < wm.w
 """,
 )
-def s_stream_fullouter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_stream_fullouter_join(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Stream-stream FULL OUTER join with event-time bound — both
     sides' unmatched rows must eventually surface, each under its own
     watermark-derived closure rule. Spark derives per-side state
@@ -1022,44 +946,40 @@ def s_stream_fullouter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     only emission TIMING moves, never the set.
     tests/test_streaming.py::test_fullouter_join_chunk_count_invariant
     pins 2-vs-4 equality."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=_STREAM_JOIN_CHUNKS)
-        clicks = (
-            stream.where(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "10 minutes")
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=_STREAM_JOIN_CHUNKS)
+    clicks = (
+        stream.where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id"),
+            F.col("ts").alias("click_ts"),
         )
-        purchases = (
-            stream.where(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "10 minutes")
+        .withWatermark("click_ts", "10 minutes")
+    )
+    purchases = (
+        stream.where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("p_ts") >= F.col("click_ts"))
-            & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-            "fullOuter",
-        ).select(
-            "click_id",
-            "purchase_id",
-            F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
-        )
-        return run_to_memory(joined, work, mode="append").localCheckpoint()
+        .withWatermark("p_ts", "10 minutes")
+    )
+    joined = clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("p_ts") >= F.col("click_ts"))
+        & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        "fullOuter",
+    ).select(
+        "click_id",
+        "purchase_id",
+        F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
+    )
+    return run_to_memory(joined, work, mode="append")
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "src_statestore",
     oracle="""
 SELECT user_id, count(*) AS n_events
@@ -1067,7 +987,7 @@ FROM events
 GROUP BY user_id
 """,
 )
-def src_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
+def src_statestore(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """State-store READER (Spark 4 state data source): run a stateful
     streaming aggregation, then open its checkpoint's state store as a
     *batch* DataFrame — the introspection path an operator uses to
@@ -1077,34 +997,14 @@ def src_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
     N partitions at a time is an ordinary parquet-like scan of the
     HDFS-backed store — no driver materialization; at scale the read
     parallelizes per state-store partition."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        counts = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-        spark_ = stream.sparkSession
-        prev = spark_.conf.get("spark.sql.shuffle.partitions")
-        spark_.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            name = "mem_" + uuid.uuid4().hex[:12]
-            ckpt = os.path.join(work, "ckpt_" + name)
-            q = (
-                counts.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            state = spark_.read.format("statestore").load(ckpt)
-            return state.select(
-                F.col("key.user_id").alias("user_id"),
-                F.col("value.count").alias("n_events"),
-            ).localCheckpoint()
-        finally:
-            spark_.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return _with_scratch(go)
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    counts = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
+    run_to_memory(counts, work, mode="complete")
+    state = spark.read.format("statestore").load(os.path.join(work, "ckpt"))
+    return state.select(
+        F.col("key.user_id").alias("user_id"),
+        F.col("value.count").alias("n_events"),
+    )
 
 
 def _event_timeout_oracle() -> str:
@@ -1173,8 +1073,8 @@ SELECT * FROM drain
     return sql
 
 
-@query("s_event_timeout", oracle=_event_timeout_oracle())
-def s_event_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query("s_event_timeout", oracle=_event_timeout_oracle())
+def s_event_timeout(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Event-time TIMER semantics: a custom stateful operator that
     emits only when a key's inactivity timer fires — the third leg of
     the arbitrary-state API after update-on-data (s_custom_state) and
@@ -1215,28 +1115,25 @@ def s_event_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((n, last_us))
         state.setTimeoutTimestamp(last_us // 1000 + 30 * 60 * 1000)
 
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        thinned = stream.where(
-            (F.col("event_type") == "signup") & (F.col("value") > 150)
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    thinned = stream.where(
+        (F.col("event_type") == "signup") & (F.col("value") > 150)
+    )
+    out = (
+        thinned.withWatermark("ts", "10 minutes")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            churn,
+            outputStructType="user_id long, n_events long, last_us long",
+            stateStructType="n long, last_us long",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-        out = (
-            thinned.withWatermark("ts", "10 minutes")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                churn,
-                outputStructType="user_id long, n_events long, last_us long",
-                stateStructType="n long, last_us long",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-        return run_to_memory(out, work, mode="append").localCheckpoint()
-
-    return _with_scratch(go)
+    )
+    return run_to_memory(out, work, mode="append")
 
 
-@query(
+@scratch_query(
     "s_suffstats_stream",
     oracle="""
 SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_start,
@@ -1250,7 +1147,7 @@ GROUP BY 1, 2
 HAVING hour_start + 3600 <= (SELECT CAST(floor(epoch(max(ts))) AS BIGINT) - 600 FROM events)
 """,
 )
-def s_suffstats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_suffstats_stream(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Streaming sufficient statistics: watermarked tumbling 1-hour
     windows emitting exact (count, sum, sum-of-squares) per event type
     on the same centi-unit integer grid as q_rolling_variance — the
@@ -1262,32 +1159,28 @@ def s_suffstats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     window; oracle mirrors it).  Scale: per-window-per-type state rows
     only; the downstream 24-row variance window runs on the sink table
     (q_rolling_variance), keeping the stream's state bounded."""
-
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        x = F.floor(F.col("value") * 100).cast("long")
-        agg = (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(x).alias("s"),
-                F.sum(x * x).alias("ss"),
-            )
-            .select(
-                F.unix_timestamp(F.col("w.start")).alias("hour_start"),
-                "event_type",
-                "n",
-                "s",
-                "ss",
-            )
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    x = F.floor(F.col("value") * 100).cast("long")
+    agg = (
+        stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(x).alias("s"),
+            F.sum(x * x).alias("ss"),
         )
-        return run_to_memory(agg, work, mode="append").localCheckpoint()
+        .select(
+            F.unix_timestamp(F.col("w.start")).alias("hour_start"),
+            "event_type",
+            "n",
+            "s",
+            "ss",
+        )
+    )
+    return run_to_memory(agg, work, mode="append")
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "s_stream_semi_join",
     oracle="""
 WITH c AS (SELECT event_id AS click_id, user_id, ts FROM events WHERE event_type = 'click'),
@@ -1298,7 +1191,7 @@ WHERE EXISTS (SELECT 1 FROM p WHERE p.user_id = c.user_id
               AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR)
 """,
 )
-def s_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_stream_semi_join(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Stream-stream LEFT SEMI join: clicks that convert (a same-user
     purchase within the following hour) emit exactly once, with no
     payload from the purchase side — the streaming EXISTS.  Unlike the
@@ -1309,44 +1202,40 @@ def s_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates are structurally impossible and the batch EXISTS oracle
     matches with no watermark mirror.  Watermarks + the event-time
     bound still size the state store (both sides evict at wm - 1 h)."""
-
-    def go(work: str) -> DataFrame:
-        # 2 replay chunks (round-7 streaming-floor shave): this job's
-        # result is chunk-count-INVARIANT — per-event emission / final-
-        # watermark closure only, no per-chunk prefix oracle — and two
-        # batches still exercise cross-batch state; 4 -> 2 chunks cut
-        # ~1.5-2 s of per-micro-batch state-commit floor at sf0.1
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
-        clicks = (
-            stream.where(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "10 minutes")
+    # 2 replay chunks (round-7 streaming-floor shave): this job's
+    # result is chunk-count-INVARIANT — per-event emission / final-
+    # watermark closure only, no per-chunk prefix oracle — and two
+    # batches still exercise cross-batch state; 4 -> 2 chunks cut
+    # ~1.5-2 s of per-micro-batch state-commit floor at sf0.1
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
+    clicks = (
+        stream.where(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id"),
+            F.col("ts").alias("click_ts"),
         )
-        purchases = (
-            stream.where(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "10 minutes")
+        .withWatermark("click_ts", "10 minutes")
+    )
+    purchases = (
+        stream.where(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("p_ts") >= F.col("click_ts"))
-            & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-            "leftSemi",
-        ).select("click_id", "user_id")
-        return run_to_memory(joined, work, mode="append").localCheckpoint()
+        .withWatermark("p_ts", "10 minutes")
+    )
+    joined = clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("p_ts") >= F.col("click_ts"))
+        & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        "leftSemi",
+    ).select("click_id", "user_id")
+    return run_to_memory(joined, work, mode="append")
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "s_rate_source",
     oracle="""
 WITH vals AS (SELECT unnest(range(0, 5000)) AS v)
@@ -1358,7 +1247,7 @@ FROM vals
 GROUP BY 1
 """,
 )
-def s_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_rate_source(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """The built-in ``rate-micro-batch`` source — Spark's deterministic
     load generator (unlike plain ``rate``, each micro-batch carries an
     exact, reproducible value range): one triggered batch of 5000
@@ -1368,35 +1257,21 @@ def s_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     harness every streaming-throughput test in this repo could be
     driven by without a file corpus.  sf_dir is unused by
     construction: the source is synthetic."""
-
-    def go(work: str) -> DataFrame:
-        stream = (
-            spark.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", 5000)
-            .option("startTimestamp", 0)
-            .load()
-        )
-        agg = stream.groupBy((F.col("value") % 7).alias("klass")).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("v_sum"),
-            F.max("value").alias("v_max"),
-        )
-        name = "mem_rate_" + uuid.uuid4().hex[:8]
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(work, "ckpt_" + name))
-            .trigger(once=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(name).localCheckpoint()
-
-    return _with_scratch(go)
+    stream = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 5000)
+        .option("startTimestamp", 0)
+        .load()
+    )
+    agg = stream.groupBy((F.col("value") % 7).alias("klass")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("value").alias("v_sum"),
+        F.max("value").alias("v_max"),
+    )
+    return run_to_memory(agg, work, mode="complete")
 
 
-@query(
+@scratch_query(
     "s_join_agg_chain",
     oracle="""
 WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
@@ -1417,7 +1292,7 @@ GROUP BY 1, w
 HAVING hour_start + 3600 <= w
 """,
 )
-def s_join_agg_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_join_agg_chain(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """TWO chained stateful operators: a stream-stream inner join
     (click -> same-user purchase within 1 h) feeding a watermarked
     tumbling-hour aggregate of conversion pairs, in append mode — the
@@ -1432,39 +1307,35 @@ def s_join_agg_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1 h bound + delay, the agg holds only open windows.  Scale:
     join keyed on user, window agg on the joined stream — two
     shuffles, each watermark-bounded."""
-
-    def go(work: str) -> DataFrame:
-        # 2 replay chunks (round-7 streaming-floor shave): this job's
-        # result is chunk-count-INVARIANT — per-event emission / final-
-        # watermark closure only, no per-chunk prefix oracle — and two
-        # batches still exercise cross-batch state; 4 -> 2 chunks cut
-        # ~1.5-2 s of per-micro-batch state-commit floor at sf0.1
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
-        clicks = (
-            stream.where(F.col("event_type") == "click")
-            .select("user_id", F.col("ts").alias("click_ts"))
-            .withWatermark("click_ts", "10 minutes")
-        )
-        purchases = (
-            stream.where(F.col("event_type") == "purchase")
-            .select(F.col("user_id").alias("p_user_id"), F.col("ts").alias("p_ts"))
-            .withWatermark("p_ts", "10 minutes")
-        )
-        joined = clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("p_ts") >= F.col("click_ts"))
-            & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-            "inner",
-        )
-        agg = (
-            joined.groupBy(F.window("click_ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_pairs"))
-            .select(F.unix_timestamp(F.col("w.start")).alias("hour_start"), "n_pairs")
-        )
-        return run_to_memory(agg, work, mode="append").localCheckpoint()
-
-    return _with_scratch(go)
+    # 2 replay chunks (round-7 streaming-floor shave): this job's
+    # result is chunk-count-INVARIANT — per-event emission / final-
+    # watermark closure only, no per-chunk prefix oracle — and two
+    # batches still exercise cross-batch state; 4 -> 2 chunks cut
+    # ~1.5-2 s of per-micro-batch state-commit floor at sf0.1
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
+    clicks = (
+        stream.where(F.col("event_type") == "click")
+        .select("user_id", F.col("ts").alias("click_ts"))
+        .withWatermark("click_ts", "10 minutes")
+    )
+    purchases = (
+        stream.where(F.col("event_type") == "purchase")
+        .select(F.col("user_id").alias("p_user_id"), F.col("ts").alias("p_ts"))
+        .withWatermark("p_ts", "10 minutes")
+    )
+    joined = clicks.join(
+        purchases,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("p_ts") >= F.col("click_ts"))
+        & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        "inner",
+    )
+    agg = (
+        joined.groupBy(F.window("click_ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_pairs"))
+        .select(F.unix_timestamp(F.col("w.start")).alias("hour_start"), "n_pairs")
+    )
+    return run_to_memory(agg, work, mode="append")
 
 
 def _cdc_apply_oracle() -> str:
@@ -1492,8 +1363,8 @@ params AS (SELECT (max(rn) + 3) // 4 AS per FROM ordered)
 """
 
 
-@query("s_cdc_apply", oracle=_cdc_apply_oracle())
-def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query("s_cdc_apply", oracle=_cdc_apply_oracle())
+def s_cdc_apply(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """CDC apply with DELETE tombstones as a streaming stateful
     operator: each event is an upsert of the user's current value —
     except 'signup' events, which model a DELETE of the key — and
@@ -1538,24 +1409,21 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        updates = (
-            stream.select("event_id", "user_id", "event_type", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                apply_ops,
-                outputStructType=(
-                    "user_id long, live int, value_centi long, last_event_id long"
-                ),
-                stateStructType="last_id long, live int, val long",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    updates = (
+        stream.select("event_id", "user_id", "event_type", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            apply_ops,
+            outputStructType=(
+                "user_id long, live int, value_centi long, last_event_id long"
+            ),
+            stateStructType="last_id long, live int, val long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        return run_to_memory(updates, work, mode="update").localCheckpoint()
-
-    return _with_scratch(go)
+    )
+    return run_to_memory(updates, work, mode="update")
 
 
 def _stream_scale_oracle() -> str:
@@ -1587,8 +1455,8 @@ FROM ({union})
 """
 
 
-@query("s_stream_minmax_scale", oracle=_stream_scale_oracle())
-def s_stream_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query("s_stream_minmax_scale", oracle=_stream_scale_oracle())
+def s_stream_minmax_scale(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """ONLINE feature normalization as a stateful stream: per-type
     (min, max) state absorbs each micro-batch FIRST, then that
     batch's rows emit min-max-scaled to integer permille — the
@@ -1620,29 +1488,26 @@ def s_stream_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         scaled = [500 if span == 0 else (v - lo) * 1000 // span for v in vals]
         yield pd.DataFrame({"event_id": ids, "scaled_permille": scaled})
 
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        rows = (
-            stream.select(
-                "event_id",
-                "event_type",
-                F.floor(F.col("value") * 100).cast("long").alias("vc"),
-            )
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                scale_batch,
-                outputStructType="event_id long, scaled_permille long",
-                stateStructType="lo long, hi long",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    rows = (
+        stream.select(
+            "event_id",
+            "event_type",
+            F.floor(F.col("value") * 100).cast("long").alias("vc"),
         )
-        return run_to_memory(rows, work, mode="update").localCheckpoint()
+        .groupBy("event_type")
+        .applyInPandasWithState(
+            scale_batch,
+            outputStructType="event_id long, scaled_permille long",
+            stateStructType="lo long, hi long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    return run_to_memory(rows, work, mode="update")
 
-    return _with_scratch(go)
 
-
-@query(
+@scratch_query(
     "s_dead_letter_split",
     oracle="""
 SELECT 'main' AS route, event_type, count(*) AS n,
@@ -1656,7 +1521,7 @@ FROM events WHERE value < 1.0
 GROUP BY event_type
 """,
 )
-def s_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_dead_letter_split(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Dead-letter routing: ONE stream split inside foreachBatch into
     the main archive and a quarantine (DLQ) directory — the
     operational pattern every production ingest needs (malformed /
@@ -1670,55 +1535,50 @@ def s_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH directories; main+dlq must tile the input exactly — a row
     routed to both (or neither) breaks the hash.  Scale: the split is
     two filters on the same micro-batch scan; no extra shuffle."""
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    main_dir = os.path.join(work, "route_main")
+    dlq_dir = os.path.join(work, "route_dlq")
+    sel = stream.select("event_id", "event_type", "value")
 
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        main_dir = os.path.join(work, "route_main")
-        dlq_dir = os.path.join(work, "route_dlq")
-        sel = stream.select("event_id", "event_type", "value")
-
-        def handle(batch_df, batch_id):
-            ok = batch_df.where(F.col("value") >= 1.0)
-            bad = batch_df.where(F.col("value") < 1.0)
-            # idempotent per-batch parts: a re-run of batch N replaces
-            # exactly its own files on both routes
-            ok.write.mode("overwrite").parquet(
-                os.path.join(main_dir, f"batch={batch_id}")
-            )
-            bad.write.mode("overwrite").parquet(
-                os.path.join(dlq_dir, f"batch={batch_id}")
-            )
-
-        q = (
-            sel.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(work, "ckpt_dlq"))
-            .trigger(availableNow=True)
-            .start()
+    def handle(batch_df, batch_id):
+        ok = batch_df.where(F.col("value") >= 1.0)
+        bad = batch_df.where(F.col("value") < 1.0)
+        # idempotent per-batch parts: a re-run of batch N replaces
+        # exactly its own files on both routes
+        ok.write.mode("overwrite").parquet(
+            os.path.join(main_dir, f"batch={batch_id}")
         )
-        q.awaitTermination()
+        bad.write.mode("overwrite").parquet(
+            os.path.join(dlq_dir, f"batch={batch_id}")
+        )
 
-        def audit(path: str, route: str) -> DataFrame:
-            return (
-                spark.read.parquet(os.path.join(path, "batch=*"))
-                .groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("event_id").alias("min_id"),
-                    F.max("event_id").alias("max_id"),
-                )
-                .select(F.lit(route).alias("route"), "*")
-            )
+    q = (
+        sel.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", os.path.join(work, "ckpt_dlq"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
+    def audit(path: str, route: str) -> DataFrame:
         return (
-            audit(main_dir, "main")
-            .unionByName(audit(dlq_dir, "dlq"))
-            .localCheckpoint()
+            spark.read.parquet(os.path.join(path, "batch=*"))
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min("event_id").alias("min_id"),
+                F.max("event_id").alias("max_id"),
+            )
+            .select(F.lit(route).alias("route"), "*")
         )
 
-    return _with_scratch(go)
+    return (
+        audit(main_dir, "main")
+        .unionByName(audit(dlq_dir, "dlq"))
+    )
 
 
-@query(
+@scratch_query(
     "s_warm_start_upsert",
     oracle="""
 WITH latest AS (
@@ -1733,7 +1593,7 @@ SELECT user_id,
 FROM latest WHERE rn = 1
 """,
 )
-def s_warm_start_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_warm_start_upsert(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Backfill → streaming HANDOFF: the keyed target is first primed
     by a BATCH pass over history (events up to the split point), then
     the live stream (the remainder, replayed) continues upserting into
@@ -1749,64 +1609,61 @@ def s_warm_start_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     bookkeeping."""
     from ..sinks.files import upsert_parquet
 
-    def go(work: str) -> DataFrame:
-        target = os.path.join(work, "warm_target")
-        e = load_table(spark, sf_dir, "events")
-        # split at the replay harness's chunk-0 boundary: first quarter
-        # (by ts order) is "history", the rest arrives as the stream
-        n = e.count()
-        per = (n + 3) // 4
-        hist_ids = (
-            e.orderBy("ts").limit(per).select("event_id")
-        )
-        sel_cols = [
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_type"),
-            F.floor(F.col("value") * 100).cast("long").alias("last_value_centi"),
-        ]
-        hist = e.join(F.broadcast(hist_ids), "event_id").select(*sel_cols)
-        w = Window.partitionBy("user_id").orderBy(F.col("last_event_id").desc())
-        primed = (
-            hist.withColumn("_rn", F.row_number().over(w))
+    target = os.path.join(work, "warm_target")
+    e = load_table(spark, sf_dir, "events")
+    # split at the replay harness's chunk-0 boundary: first quarter
+    # (by ts order) is "history", the rest arrives as the stream
+    n = e.count()
+    per = (n + 3) // 4
+    hist_ids = (
+        e.orderBy("ts").limit(per).select("event_id")
+    )
+    sel_cols = [
+        "user_id",
+        F.col("event_id").alias("last_event_id"),
+        F.col("event_type").alias("last_type"),
+        F.floor(F.col("value") * 100).cast("long").alias("last_value_centi"),
+    ]
+    hist = e.join(F.broadcast(hist_ids), "event_id").select(*sel_cols)
+    w = Window.partitionBy("user_id").orderBy(F.col("last_event_id").desc())
+    primed = (
+        hist.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    primed.write.mode("overwrite").parquet(target)
+
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+    live = stream.join(
+        F.broadcast(hist_ids), "event_id", "left_anti"
+    ).select(*sel_cols)
+
+    def handle(batch_df, batch_id):
+        latest = (
+            batch_df.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        primed.write.mode("overwrite").parquet(target)
+        upsert_parquet(
+            spark, spark.read.parquet(target), latest, ["user_id"], target
+        )
 
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-        live = stream.join(
-            F.broadcast(hist_ids), "event_id", "left_anti"
-        ).select(*sel_cols)
-
-        def handle(batch_df, batch_id):
-            latest = (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            upsert_parquet(
-                spark, spark.read.parquet(target), latest, ["user_id"], target
-            )
-
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                live.writeStream.foreachBatch(handle)
-                .option("checkpointLocation", os.path.join(work, "ckpt_warm"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        return spark.read.parquet(target).localCheckpoint()
-
-    return _with_scratch(go)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = (
+            live.writeStream.foreachBatch(handle)
+            .option("checkpointLocation", os.path.join(work, "ckpt_warm"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.read.parquet(target)
 
 
-@query(
+@scratch_query(
     "s_rocksdb_state",
     oracle="""
 SELECT user_id, count(*) AS n_events,
@@ -1816,7 +1673,7 @@ FROM events
 GROUP BY user_id
 """,
 )
-def s_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_rocksdb_state(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Keyed streaming aggregation under the **RocksDB state store
     provider** — the backend that matters at 100 TB, where keyed state
     outgrows the default in-heap HDFSBackedStateStore (RocksDB spills
@@ -1831,36 +1688,32 @@ def s_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     this stream.  Scale: state is hash-partitioned by user_id across
     executors; with RocksDB + changelog checkpointing the per-batch
     checkpoint cost is O(delta), not O(state)."""
-
-    def go(work: str) -> DataFrame:
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    try:
+        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
+        agg = stream.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.floor(F.col("value") * 100).cast("long"))
+            .cast("long")
+            .alias("v_centi"),
+            F.max("event_id").alias("max_id"),
         )
-        try:
-            stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
-            agg = stream.groupBy("user_id").agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.floor(F.col("value") * 100).cast("long"))
-                .cast("long")
-                .alias("v_centi"),
-                F.max("event_id").alias("max_id"),
-            )
-            return run_to_memory(agg, work, mode="complete").localCheckpoint()
-        finally:
-            # restore EXACTLY: an explicit set of the default is not the
-            # same session state as unset (and the test asserts so)
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return _with_scratch(go)
+        return run_to_memory(agg, work, mode="complete")
+    finally:
+        # restore EXACTLY: an explicit set of the default is not the
+        # same session state as unset (and the test asserts so)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
-@query(
+@scratch_query(
     "s_subseq_stream",
     oracle=_subseq_prefix() + """,
 scored AS (
@@ -1872,7 +1725,7 @@ scored AS (
 SELECT user_id, start_id, dist FROM scored WHERE dist <= 100000000
 """,
 )
-def s_subseq_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_subseq_stream(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """STREAMING subsequence similarity search — the actual setting of
     EDBT'19 ("Time Series Similarity Search for Streaming Data"): the
     query pattern is static config (the batch [q_subseq_search]
@@ -1926,33 +1779,30 @@ def s_subseq_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    def go(work: str) -> DataFrame:
-        # 2 replay chunks (round-7 streaming-floor shave): this job's
-        # result is chunk-count-INVARIANT — per-event emission / final-
-        # watermark closure only, no per-chunk prefix oracle — and two
-        # batches still exercise cross-batch state; 4 -> 2 chunks cut
-        # ~1.5-2 s of per-micro-batch state-commit floor at sf0.1
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
-        matches = (
-            stream.select("user_id", "event_id", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                matcher,
-                outputStructType="user_id long, start_id long, dist long",
-                stateStructType="ids array<long>, vs array<long>",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    # 2 replay chunks (round-7 streaming-floor shave): this job's
+    # result is chunk-count-INVARIANT — per-event emission / final-
+    # watermark closure only, no per-chunk prefix oracle — and two
+    # batches still exercise cross-batch state; 4 -> 2 chunks cut
+    # ~1.5-2 s of per-micro-batch state-commit floor at sf0.1
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
+    matches = (
+        stream.select("user_id", "event_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            matcher,
+            outputStructType="user_id long, start_id long, dist long",
+            stateStructType="ids array<long>, vs array<long>",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        return run_to_memory(matches, work, mode="append").localCheckpoint()
-
-    return _with_scratch(go)
+    )
+    return run_to_memory(matches, work, mode="append")
 
 
 _SGA_BUDGET = 500
 
 
-@query(
+@scratch_query(
     "s_grad_accum_stream",
     oracle=f"""
 WITH r AS (
@@ -1969,7 +1819,7 @@ SELECT user_id, cum_before // {_SGA_BUDGET} AS step_id,
 FROM r GROUP BY 1, 2
 """,
 )
-def s_grad_accum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def s_grad_accum_stream(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     """Streaming gradient-accumulation boundaries — the online twin of
     m_grad_accum_plan: per user, events arrive in time order and an
     optimizer step closes whenever the RUNNING floor(value) mass
@@ -2037,28 +1887,24 @@ def s_grad_accum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    def go(work: str) -> DataFrame:
-        stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
-        updates = (
-            stream.select("user_id", "event_id", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                accum,
-                outputStructType="user_id long, step_id long, "
-                "n_events long, step_mass long",
-                stateStructType="cum long, n_open long, m_open long",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=2)
+    updates = (
+        stream.select("user_id", "event_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            accum,
+            outputStructType="user_id long, step_id long, "
+            "n_events long, step_mass long",
+            stateStructType="cum long, n_open long, m_open long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        mem = run_to_memory(updates, work, mode="update")
-        return (
-            mem.groupBy("user_id", "step_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("step_mass").alias("step_mass"),
-            )
-            .localCheckpoint()
+    )
+    mem = run_to_memory(updates, work, mode="update")
+    return (
+        mem.groupBy("user_id", "step_id")
+        .agg(
+            F.max("n_events").alias("n_events"),
+            F.max("step_mass").alias("step_mass"),
         )
-
-    return _with_scratch(go)
+    )
